@@ -3,7 +3,7 @@ package graft.api
 import java.sql.Timestamp
 import graft.ask.{Ask, Embedder}
 import graft.memory.MemoryCards
-import graft.search.{FrameCols, Search}
+import graft.search.{FrameCols, Search, SketchFilter}
 import graft.store.FrameStore
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -192,7 +192,7 @@ final class Graft(val spark: SparkSession, basePath: String,
   private var vecIndex: Option[(String, Int)] = None // (path, nprobe)
   private var vecHandleCache: Option[((Long, Long), Option[graft.vector.IvfIndex.Handle])] = None
   private var sketchTable: Option[String] = None
-  private var sketchFreshCache: Option[((Long, Long), Boolean)] = None
+  private var liveSketchCache: Option[((Long, Long), Option[Option[SketchFilter.Live]])] = None
 
   /** freshness-cache key: the in-process mutation epoch AND the
     * persisted cross-process watermark — a FOREIGN writer's commit (two
@@ -271,8 +271,22 @@ final class Graft(val spark: SparkSession, basePath: String,
     * cached serving verdict/handle so the next query reopens the current
     * artifact instead of a deleted generation */
   private[api] def invalidateIndexCaches(): Unit = {
-    lexFreshCache = None; vecHandleCache = None; sketchFreshCache = None
+    lexFreshCache = None; vecHandleCache = None; liveSketchCache = None
   }
+
+  /** (store-version stamp, torn-refresh pending) of a catalog-table
+    * serving artifact; None when the table is missing */
+  private def tableStamp(table: String): Option[(Option[Long], Boolean)] =
+    if (!spark.catalog.tableExists(table)) None
+    else {
+      val props = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(table)).properties
+      Some((props.get("graft.store.version").flatMap(_.toLongOption),
+        props.get("graft.refresh.pending").contains("1")))
+    }
+
+  private def stampCurrent(table: String): Boolean =
+    tableStamp(table).exists(_._1.contains(currentVersion))
 
   // ---- F10 sketch pre-filter as FACADE behavior (reference: applied
   // inside search() by default with a `no_sketch` opt-out,
@@ -284,6 +298,17 @@ final class Graft(val spark: SparkSession, basePath: String,
   // the verbs). Candidate shrink trades recall for speed exactly like
   // the reference (BM25 re-ranks survivors; a match beyond the hamming
   // cut is dropped) — `noSketch = true` restores exhaustive ranking.
+  //
+  // Serving is per watermark and runs on the driver: the live sketch
+  // (the table's distinct rows of live frames) is query-independent, so
+  // the first sketch-using search on a (mutation epoch, persisted
+  // watermark) key collects it once — a bounded limit(cap + 1) collect —
+  // and every later search on that key hashes the query and picks its
+  // candidates with no Spark job; the kept ids reach the ranking as a
+  // local relation. A live sketch over [[SketchFilter.LiveCap]] rows
+  // stays in Spark: the same selection as a plan over sketch ⋈ live ids
+  // ([[SketchFilter.candidates]]). Puts, refreshes and noSketch searches
+  // never fill the cache.
   //
   // Maintenance is APPEND-ONLY SAFE by construction: sketch rows are
   // per-doc-version and ids are never reused, so a superseded/tombstoned
@@ -315,25 +340,42 @@ final class Graft(val spark: SparkSession, basePath: String,
     * its version stamp matches the store (a stale sketch is missing the
     * newest docs' rows — skipping it is the lossless direction). */
   def attachSketchTable(table: String): Unit = {
-    sketchTable = Some(table); sketchFreshCache = None
+    sketchTable = Some(table); liveSketchCache = None
   }
 
-  def detachSketchTable(): Unit = { sketchTable = None; sketchFreshCache = None }
+  def detachSketchTable(): Unit = { sketchTable = None; liveSketchCache = None }
 
-  private def sketchFresh(table: String): Boolean = {
+  /** live-sketch rows above which serving stays in Spark; a test seam */
+  private[api] var liveSketchCap: Int = SketchFilter.LiveCap
+
+  /** is a live sketch (or its over-cap verdict) cached? */
+  private[api] def liveSketchCached: Boolean = liveSketchCache.isDefined
+
+  /** the attached sketch's serving state on the current watermark,
+    * cached per [[storeMovedKey]]: None = stale or missing stamp (skip
+    * the filter), Some(Some(live)) = held on the driver, Some(None) =
+    * fresh but over [[liveSketchCap]] (the Spark plan serves it) */
+  private def liveSketch(table: String): Option[Option[SketchFilter.Live]] = {
     val key = storeMovedKey
-    sketchFreshCache match {
+    liveSketchCache match {
       case Some((k, v)) if k == key => v
       case _ =>
-        val fresh = spark.catalog.tableExists(table) && {
-          val props = spark.sessionState.catalog.getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(table)).properties
-          props.get("graft.store.version").contains(currentVersion.toString)
-        }
-        sketchFreshCache = Some((key, fresh))
-        fresh
+        val v = if (!stampCurrent(table)) None
+          else Some(SketchFilter.Live.collect(liveSketchRows(table), liveSketchCap))
+        liveSketchCache = Some((key, v))
+        v
     }
   }
+
+  /** sketch rows of LIVE frames only: superseded/tombstoned versions'
+    * rows are inert for membership but would still count toward the
+    * minKeep floor and occupy hamming-nearest slots — on a churned store
+    * the effective live keep would fall below the reference's
+    * max(topK·10, 500) contract. The semi-join moves only the id column. */
+  private def liveSketchRows(table: String): DataFrame =
+    spark.table(table).join(
+      frames.latestActive.select(col("id").cast("long").as("doc_id")),
+      Seq("doc_id"), "left_semi")
 
   /** Catch the attached sketch table up to the store: sketches of the
     * post-stamp ACTIVE frames append, then the stamp advances. Always
@@ -358,15 +400,9 @@ final class Graft(val spark: SparkSession, basePath: String,
     case None => throw new IllegalStateException(
       "refreshSketchTable: no attached sketch table (attachSketchTable first)")
     case Some(table) =>
-      // (stamp, torn-refresh pending)
+      liveSketchCache = None
       def snapshot(): (Option[Long], Boolean) =
-        if (!spark.catalog.tableExists(table)) (None, false)
-        else {
-          val props = spark.sessionState.catalog.getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(table)).properties
-          (props.get("graft.store.version").flatMap(_.toLongOption),
-           props.get("graft.refresh.pending").contains("1"))
-        }
+        tableStamp(table).getOrElse((None, false))
       val cur0 = currentVersion
       val (stamp0, pending0) = snapshot()
       // lock-free only on a STABLE observation (see refreshLexIndex: a
@@ -390,7 +426,6 @@ final class Graft(val spark: SparkSession, basePath: String,
               .write.mode(SaveMode.Append).saveAsTable(table)
             spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
               s"('graft.store.version' = '$cur', 'graft.refresh.pending' = '0')")
-            sketchFreshCache = None
             "appended"
           }
         }
@@ -415,23 +450,15 @@ final class Graft(val spark: SparkSession, basePath: String,
     * (correct but slower at scale — the F10 candidate shrink stops
     * applying), so the doctor plans the always-append refresh. */
   private[api] def sketchStampStale(table: String): Boolean =
-    !spark.catalog.tableExists(table) || {
-      val props = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)).properties
-      !props.get("graft.store.version").contains(currentVersion.toString) ||
-        props.get("graft.refresh.pending").contains("1")
-    }
+    !tableStamp(table).exists { case (stamp, pending) =>
+      stamp.contains(currentVersion) && !pending }
 
   private def lexIndexFresh(table: String): Boolean = {
     val key = storeMovedKey
     lexFreshCache match {
       case Some((k, v)) if k == key => v
       case _ =>
-        val fresh = spark.catalog.tableExists(table) && {
-          val props = spark.sessionState.catalog.getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(table)).properties
-          props.get("graft.store.version").contains(currentVersion.toString)
-        }
+        val fresh = stampCurrent(table)
         lexFreshCache = Some((key, fresh))
         fresh
     }
@@ -622,20 +649,17 @@ final class Graft(val spark: SparkSession, basePath: String,
     * needed (missing/unparseable stamp, torn-refresh marker, or
     * deletes/supersedes in the delta). One limit(1) count over the
     * commitSeq-filtered log. */
-  private[api] def lexDeltaAppendable(table: String): Boolean = {
-    if (!spark.catalog.tableExists(table)) return false
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val stamp = meta.properties.get("graft.store.version").flatMap(_.toLongOption)
-    val pending = meta.properties.get("graft.refresh.pending").contains("1")
-    if (stamp.isEmpty || pending) false
-    else if (frames.lastVacuumSeq > stamp.get) false // log purged past the stamp
-    else frames.log.filter(
-        col("commitSeq") > stamp.get && col("commitSeq") <= currentVersion)
-      .filter(col("status") =!= graft.model.Frame.Active ||
-        col("supersedes").isNotNull)
-      .limit(1).count() == 0
-  }
+  private[api] def lexDeltaAppendable(table: String): Boolean =
+    tableStamp(table) match {
+      case Some((Some(stamp), false)) =>
+        frames.lastVacuumSeq <= stamp && // else the log is purged past the stamp
+        frames.log.filter(
+            col("commitSeq") > stamp && col("commitSeq") <= currentVersion)
+          .filter(col("status") =!= graft.model.Frame.Active ||
+            col("supersedes").isNotNull)
+          .limit(1).count() == 0
+      case _ => false // missing table, unparseable stamp or torn refresh
+    }
 
   /** the lex freshness check, with the [[healOnRead]] rung in front: a
     * stale stamp whose delta is append-only heals via the O(delta)
@@ -873,28 +897,23 @@ final class Graft(val spark: SparkSession, basePath: String,
           lastSearchRoute = "indexed"
           // the sketch pre-filter rides the indexed route's allowed-id
           // semi-join; it applies only with TEXT terms to rank (the
-          // reference's has_text_terms guard) and only while the sketch
-          // covers the whole store (stale sketch = missing newest docs —
-          // skipping is the lossless direction)
-          val allowed = sketchTable.filter(_ => !noSketch)
-            .filter(sketchFresh)
-            .filter(_ => graft.search.QExpr
-              .words(graft.search.QueryParser.parse(query)).exists(_.nonEmpty))
-            .map { sk =>
-              val qh = graft.search.SketchFilter.querySimhash(spark, query)
-              lastSketchApplied = true
-              // floor over LIVE ids only: superseded/tombstoned versions'
-              // sketch rows are inert for membership but would still
-              // count toward the minKeep floor and occupy hamming-nearest
-              // slots — on a churned store the effective live keep falls
-              // below the reference's max(topK·10, 500) contract. The
-              // semi-join moves only the narrow (id) column.
-              val live = frames.latestActive
-                .select(col("id").cast("long").as("doc_id"))
-              graft.search.SketchFilter.candidates(
-                spark.table(sk).join(live, Seq("doc_id"), "left_semi"),
-                qh, topK)
+          // reference's has_text_terms guard), only when the query has
+          // tokens to sketch, and only while the sketch covers the whole
+          // store (stale sketch = missing newest docs — skipping is the
+          // lossless direction)
+          val allowed = for {
+            sk <- sketchTable if !noSketch
+            if graft.search.QExpr
+              .words(graft.search.QueryParser.parse(query)).exists(_.nonEmpty)
+            qh <- SketchFilter.queryHash(query)
+            live <- liveSketch(sk)
+          } yield {
+            lastSketchApplied = true
+            live match {
+              case Some(l) => l.candidates(qh, topK).toSeq.toDF("doc_id")
+              case None => SketchFilter.candidates(liveSketchRows(sk), qh, topK)
             }
+          }
           Search.searchIndexed(frames.latestActive, "id", frameCols, query,
             t, opts, allowedIds = allowed)
         } else {

@@ -28,6 +28,9 @@ object F {
       reg.createOrReplaceTempFunction("minhash_sig", es => MinHashSigExpr(es.head), "built-in")
       reg.createOrReplaceTempFunction("pq_encode", es => PqEncodeExpr(es(0), es(1)), "built-in")
       reg.createOrReplaceTempFunction("pq_adist", es => PqAsymmetricExpr(es(0), es(1)), "built-in")
+      reg.createOrReplaceTempFunction("in_id_set", es => InIdSetExpr(es(0),
+        es(1).eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+          .toLongArray().sorted), "built-in")
     }
   }
 
@@ -36,6 +39,10 @@ object F {
   def dotProduct(a: Column, b: Column): Column = call_function("dot_product", a, b)
   def l2Distance(a: Column, b: Column): Column = call_function("l2_distance", a, b)
   def porterStem(c: Column): Column = call_function("porter_stem", c)
+
+  /** `c ∈ ids` for a driver-resident id set (InIdSetExpr) */
+  def inIdSet(c: Column, ids: Array[Long]): Column =
+    call_function("in_id_set", c, typedLit(ids))
 
   /** Reference tokenizer (src/lex.rs:416-431): lowercase, split on anything
     * outside [a-z0-9&@+/_], keep tokens containing at least one alnum.

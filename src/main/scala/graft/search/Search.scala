@@ -139,7 +139,8 @@ object Search {
     *        postings exactly like a compiled field predicate: stats come
     *        from the allowed subset, so scores bit-match the corpus path
     *        over the same prefiltered docs, and the only thing that
-    *        moves is an id-list-sized exchange. */
+    *        moves is an id-list-sized exchange (none for a local
+    *        relation, which applies as one id-set predicate). */
   def searchIndexed(docs: DataFrame, idCol: String, f: FrameCols,
                     query: String, indexTable: String,
                     opts: Options = Options(),
@@ -316,9 +317,19 @@ object Search {
       else postings.join(
         filtered.select(col(idCol).cast("long").as("doc_id")),
         Seq("doc_id"), "left_semi")
-    val posts = allowedIds.fold(posts0)(ids => posts0.join(
-      ids.select(col(ids.columns.head).cast("long").as("doc_id")),
-      Seq("doc_id"), "left_semi"))
+    // a driver-resident allowlist (a local relation, e.g. the facade's
+    // live-sketch candidates) applies as one id-set predicate: the
+    // semi-join's rows without the job that broadcasting the relation
+    // would launch
+    val posts = allowedIds.fold(posts0) { allowed =>
+      val ids = allowed.select(col(allowed.columns.head).cast("long").as("doc_id"))
+      ids.queryExecution.optimizedPlan match {
+        case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+          posts0.filter(graft.functions.F.inIdSet(col("doc_id"),
+            ids.collect().collect { case r if !r.isNullAt(0) => r.getLong(0) }))
+        case _ => posts0.join(ids, Seq("doc_id"), "left_semi")
+      }
+    }
     val qTerms = (if (opts.stemmed) terms.map(graft.text.Porter.stem) else terms).distinct
     val ranked0 = BM25.scorePostings(posts, qTerms,
       topK = (opts.offset + opts.topK) * 4)

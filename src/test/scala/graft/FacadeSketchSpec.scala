@@ -135,6 +135,65 @@ class FacadeSketchSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS `$skt`")
   }
 
+  /** the 800-doc store of the first test: the hamming cut binds */
+  private def bindingStore(lex: String, skt: String): Graft = {
+    val g = new Graft(spark, tmpStore())
+    g.frames.put((0 until 800).map { i =>
+      if (i % 8 == 0)
+        (s"mv2://skj/$i", s"spark join window shuffle partition stage$i")
+      else
+        (s"mv2://skj/$i", s"meadow${i % 97} orchard${i % 89} fern${i % 83} " +
+          s"bramble${i % 79} thicket${i % 73} hollow${i % 71} glade moss")
+    } :+ ("mv2://skj/cjk", "日本 spark"))
+    spark.sql(s"DROP TABLE IF EXISTS `$lex`")
+    spark.sql(s"DROP TABLE IF EXISTS `$skt`")
+    g.buildLexIndex(lex, stemmed = false)
+    g.buildSketchTable(skt)
+    g
+  }
+
+  private def dropTables(tables: String*): Unit =
+    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+
+  test("a query with no tokenizer tokens skips the pre-filter instead of throwing") {
+    val lex = "facade_sketch_notok_lex"; val skt = "facade_sketch_notok_sk"
+    try {
+      val g = bindingStore(lex, skt)
+      // the Spark query sketch has no row to take the head of
+      intercept[NoSuchElementException](SketchFilter.querySimhash(spark, "日本"))
+      assert(SketchFilter.queryHash("日本").isEmpty)
+      val served = g.search("日本", topK = 10)
+      assert(g.lastSearchRoute == "indexed")
+      assert(!g.lastSketchApplied, "nothing to sketch: the filter must not apply")
+      assert(rows(served) == rows(g.search("日本", topK = 10, noSketch = true)))
+    } finally dropTables(lex, skt)
+  }
+
+  test("warm default search launches no more Spark jobs than a noSketch search") {
+    val lex = "facade_sketch_jobs_lex"; val skt = "facade_sketch_jobs_sk"
+    try {
+      val g = bindingStore(lex, skt)
+      val sc = spark.sparkContext
+      def jobs(run: => Unit): Int = {
+        val group = s"facade-sketch-jobs-${java.util.UUID.randomUUID}"
+        sc.setJobGroup(group, group)
+        try run finally sc.clearJobGroup()
+        org.apache.spark.TestListenerBus.drain(sc)
+        sc.statusTracker.getJobIdsForGroup(group).length
+      }
+      val q = "spark join window"
+      // warm both routes: the first sketch-using search collects the live
+      // sketch for this watermark
+      g.search(q, topK = 10).collect(): Unit
+      g.search(q, topK = 10, noSketch = true).collect(): Unit
+      val withSketch = jobs(g.search(q, topK = 10).collect(): Unit)
+      assert(g.lastSketchApplied)
+      val without = jobs(g.search(q, topK = 10, noSketch = true).collect(): Unit)
+      assert(withSketch <= without,
+        s"default search ran $withSketch jobs, noSketch ran $without")
+    } finally dropTables(lex, skt)
+  }
+
   test("duplicate sketch rows never change the candidate set (dedup defense)") {
     import spark.implicits._
     // deterministic pseudo-hashes; pick a query hash that leaves the
