@@ -77,8 +77,8 @@ final class Graft(val spark: SparkSession, basePath: String,
     // rules-engine enrichment mints memory cards (enrichment stage ST2)
     ids.foreach(mintCards(_, text, ts))
     // checkpoint-snapshot args are by-name — only paid if one fires,
-    // and then from the store's incremental live-count cache (one full
-    // materialization at most, not one per checkpoint fire)
+    // and then from the store's held live view (the size of its key set;
+    // a put rolls it forward, so a fire costs no Spark job)
     ids.foreach(id => recorder.recordPut(id,
       frames.liveCount, currentVersion))
     // instant-index: the commit catches attached serving indexes up
@@ -1156,14 +1156,13 @@ final class Graft(val spark: SparkSession, basePath: String,
     * apply verify). Every branch is the same aggregate it was
     * standalone; only the number of Spark actions changes (5+ → 1 per
     * probe). `extra` receives the persisted live view so staleness
-    * branches reuse it instead of recomputing the window + anti-join;
+    * branches reuse it instead of recomputing the live view;
     * each returned (key, df) is counted — count(df) joins the union.
     * Keys whose semantics are "present only when positive" are the
     * CALLER's post-filter; this returns every branch's count. */
   private[api] def doctorCounters(
       extra: DataFrame => Seq[(String, DataFrame)] = _ => Nil)
       : Map[String, Long] = {
-    val preWatermark = frames.persistedWatermark
     val live = frames.latestActive
       .select(col("id"), col("parentId"), col("role"), col("uri"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1198,14 +1197,10 @@ final class Graft(val spark: SparkSession, basePath: String,
       val extraBranches = extra(live).map { case (key, df) =>
         df.agg(count(lit(1)).as("n")).select(lit(key).as("k"), col("n"))
       }
-      val counters = (Seq(orphanChunks, danglingCards, dupLiveUris,
+      (Seq(orphanChunks, danglingCards, dupLiveUris,
           logCounters, liveFrames) ++ extraBranches)
         .reduce(_ unionByName _)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      // the union just paid for the live count — prime the store's
-      // watermark-keyed cache so later liveCount reads stay free
-      frames.primeLiveCount(preWatermark, counters("live_frames"))
-      counters
     } finally live.unpersist(blocking = false): Unit
   }
 

@@ -3,7 +3,6 @@ package graft.ask
 import graft.functions.F
 import graft.search.{FrameCols, Lexical, QExpr, QueryParser, Snippets}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The RAG `ask()` orchestrator — Spark-native reimplementation of the
@@ -13,9 +12,10 @@ import org.apache.spark.sql.functions._
   * session diversification, semantic re-rank, correction promotion) →
   * citations + extractive synthesis.
   *
-  * Every candidate list is a lazy DataFrame; Catalyst collapses the shared
-  * corpus scan, and all re-ranks are window functions over the fused top-k'
-  * (tens of rows), so the expensive part remains the initial scans.
+  * Each candidate list is a bounded top-k' page collected to the driver;
+  * fusion and every re-rank then run on the driver over those lists (tens
+  * of rows), with Spark reading only the candidates' metadata, vectors
+  * and snippets. The expensive part remains the retrieval scans.
   */
 object Ask {
 

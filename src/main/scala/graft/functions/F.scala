@@ -28,9 +28,14 @@ object F {
       reg.createOrReplaceTempFunction("minhash_sig", es => MinHashSigExpr(es.head), "built-in")
       reg.createOrReplaceTempFunction("pq_encode", es => PqEncodeExpr(es(0), es(1)), "built-in")
       reg.createOrReplaceTempFunction("pq_adist", es => PqAsymmetricExpr(es(0), es(1)), "built-in")
+      def longs(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+        e.eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray()
       reg.createOrReplaceTempFunction("in_id_set", es => InIdSetExpr(es(0),
-        es(1).eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toLongArray().sorted), "built-in")
+        longs(es(1)).sorted), "built-in")
+      reg.createOrReplaceTempFunction("in_live_version", es => {
+        val (ids, seqs) = InLiveVersionExpr.sortedKeys(longs(es(2)), longs(es(3)))
+        InLiveVersionExpr(es(0), es(1), ids, seqs)
+      }, "built-in")
     }
   }
 
@@ -43,6 +48,12 @@ object F {
   /** `c ∈ ids` for a driver-resident id set (InIdSetExpr) */
   def inIdSet(c: Column, ids: Array[Long]): Column =
     call_function("in_id_set", c, typedLit(ids))
+
+  /** `(id, seq)` is one of the version keys `(ids(i), seqs(i))`
+    * (InLiveVersionExpr; one key per id) */
+  def inLiveVersion(id: Column, seq: Column, ids: Array[Long],
+                    seqs: Array[Long]): Column =
+    call_function("in_live_version", id, seq, typedLit(ids), typedLit(seqs))
 
   /** Reference tokenizer (src/lex.rs:416-431): lowercase, split on anything
     * outside [a-z0-9&@+/_], keep tokens containing at least one alnum.

@@ -132,11 +132,9 @@ object SketchFilter {
 
     /** collect `sketches` (doc_id, simhash) to the driver, bounded: None
       * when it holds more than `cap` rows (one `limit(cap + 1)` collect) */
-    def collect(sketches: DataFrame, cap: Int): Option[Live] = {
-      val rows = sketches.select(col("doc_id").cast("long"), col("simhash"))
-        .limit(cap + 1).collect()
-      if (rows.length > cap) None
-      else Some(Live(rows.toSeq.map(r => (r.getLong(0), r.getLong(1)))))
-    }
+    def collect(sketches: DataFrame, cap: Int): Option[Live] =
+      graft.ops.Bounded.collectAtMost(
+          sketches.select(col("doc_id").cast("long"), col("simhash")), cap)
+        .map(rows => Live(rows.toSeq.map(r => (r.getLong(0), r.getLong(1)))))
   }
 }

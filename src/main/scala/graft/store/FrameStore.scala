@@ -12,9 +12,13 @@ import org.apache.spark.sql.functions._
   * the current state is the latest-active window view; `vacuum` is the
   * compaction batch job (mutation.rs:2999).
   *
-  * At scale the log is partitioned parquet (partition by track/date in
-  * production); the latest-active view is one window over id — the same
-  * row_number idiom Delta-style MVCC compactions use.
+  * The live view is a filter on the log: [[latestActive]] keeps the rows
+  * whose `(id, commitSeq)` version key is live. The keys are held on the
+  * driver per store state and keyed on `(mutationEpoch,
+  * persistedWatermark)`, so a commit by this handle or by any other
+  * handle or process is seen on the next read. Over the cap, and for
+  * [[asOf]], the view is the per-id row_number window plus a
+  * `supersedes` anti-join — the idiom Delta-style MVCC compactions use.
   *
   * Writer discipline (reference src/lock.rs + src/lockfile.rs): every
   * mutation — put / update / delete / vacuum — runs under the exclusive
@@ -27,9 +31,11 @@ import org.apache.spark.sql.functions._
   * commitSeq collisions, no double-ingest of the same content hash
   * through the dedup check's read-then-write window. Ids are never
   * reused, even across [[vacuum]] (the watermark survives compaction —
-  * the reference's monotonic frame ids). READ freshness stays an
-  * in-process contract (the snapshot pin and `mutationEpoch` don't see a
-  * foreign writer); the lock is what makes concurrent WRITES safe.
+  * the reference's monotonic frame ids). Reads take no lock: the held
+  * live keys are re-derived when either key part moves, and a fill is
+  * cached only once the log shows the watermark's commit (see
+  * [[liveState]]). A pinned [[snapshotCurrent]] copy is the exception:
+  * only this handle's own mutations unpin it.
   */
 final class FrameStore(spark: SparkSession, path: String,
                        lockOptions: StoreLock.Options =
@@ -154,46 +160,84 @@ final class FrameStore(spark: SparkSession, path: String,
   private[graft] def lastVacuumSeq: Long =
     readSeqFile().map(_._3).orElse(counters.map(_._3)).getOrElse(0L)
 
-  /** Cached latest-active row count, maintained incrementally across
-    * PUT-shaped appends (every appended frame is new and Active, so the
-    * live view grows by exactly the batch size) and invalidated by
-    * mutations whose live-delta needs a lookup (update/delete — the
-    * superseded/tombstoned id may or may not have been live). Vacuum is
-    * value-neutral for the live view and keeps it. This serves the
-    * recorder's auto-checkpoint probe: a checkpoint fire costs one
-    * cached read instead of a full window + anti-join materialization
-    * per fire (the one remaining store-sized read on a facade verb). */
-  private var liveCountCache: Option[(Long, Long)] = None // (watermark, count)
+  // ---- the live view, held per store state ----
 
-  /** live frame count (documents + chunks), served from the incremental
-    * cache when it is current. The cache is KEYED on the persisted
-    * watermark, so a FOREIGN writer's commit (which this handle's
-    * in-process state never sees) invalidates it for one tiny FS read
-    * per call — never a stale count. */
-  def liveCount: Long = {
-    val w = persistedWatermark
-    liveCountCache match {
-      case Some((k, c)) if k == w => c
+  /** the most log rows a fill collects, and so the largest live key set
+    * held on the driver (16 bytes a key); a private seam so tests can
+    * drive the over-cap route, not an option */
+  private[store] var liveCap: Int = graft.search.SketchFilter.LiveCap
+
+  /** the live view's state for one `(mutationEpoch, persistedWatermark)`
+    * key. A put by this handle rolls it forward under the store lock
+    * ([[appendFrames]]); update, delete and vacuum drop it. */
+  @volatile private var liveCache: Option[((Long, Long), FrameStore.LiveState)] = None
+
+  /** the store-state key and the last-vacuum seq, from one `_graft_seq`
+    * read */
+  private def liveKey(): ((Long, Long), Long) = {
+    val epoch = mutationEpoch
+    val rec = readSeqFile()
+    ((epoch, rec.map(_._2).getOrElse(-1L)), rec.map(_._3).getOrElse(0L))
+  }
+
+  /** The live view on the current key. A miss runs one narrow log scan
+    * of `(id, commitSeq, active, supersedes)` bounded by `liveCap + 1`
+    * rows, in one task, and derives the live keys on the driver; past the
+    * bound the state is [[FrameStore.OverCap]] and reads use the window
+    * plan.
+    *
+    * Completeness: `appendFrames` persists the watermark before its rows
+    * land, so a reader can see a commit's watermark while its rows are
+    * still being written. A fill is cached only if it saw the key's
+    * commit — the log's max commitSeq reaches the watermark, or a vacuum
+    * at or past the watermark compacted the log (read before the scan).
+    * An incomplete fill serves this one read and is not cached. */
+  private def liveState: FrameStore.LiveState = {
+    val (key, vac) = liveKey()
+    liveCache match {
+      case Some((k, st)) if k == key => st
       case _ =>
-        val c = latestActive.count()
-        liveCountCache = Some((w, c))
-        c
+        // one partition, so the bounded collect is one job: a limit over
+        // p partitions scans them in ~log4(p) successive jobs
+        val scan = log.select($"id", $"commitSeq",
+          coalesce($"status" === Frame.Active, lit(false)), $"supersedes")
+          .coalesce(1)
+        graft.ops.Bounded.collectAtMost(scan, liveCap) match {
+          case None =>
+            liveCache = Some((key, FrameStore.OverCap(None)))
+            FrameStore.OverCap(None)
+          case Some(rows) =>
+            val held = FrameStore.Held(FrameStore.LiveKeys.derive(rows))
+            val maxSeq = rows.iterator.map(_.getLong(1)).maxOption.getOrElse(-1L)
+            if (maxSeq >= key._2 || vac >= key._2) liveCache = Some((key, held))
+            held
+        }
     }
   }
 
-  /** feed the live-count cache from a consumer that just paid for the
-    * count anyway (the doctor's one-job probe union): keyed on the
-    * watermark the caller read BEFORE computing — the same read-w-then-
-    * count order [[liveCount]] itself uses, so staleness behavior is
-    * identical. Never downgrades a fresher cache entry. */
-  private[graft] def primeLiveCount(watermark: Long, n: Long): Unit =
-    liveCountCache match {
-      case Some((k, _)) if k >= watermark => () // never downgrade fresher
-      case _ => liveCountCache = Some((watermark, n))
-    }
+  /** live frame count (documents + chunks): the size of the held live
+    * key set. Over the cap, the window plan's count, kept in the same
+    * cache entry once the log is seen to hold the key's commit (checked
+    * BEFORE counting, so the count includes that commit's rows). */
+  def liveCount: Long = liveState match {
+    case FrameStore.Held(keys) => keys.size.toLong
+    case FrameStore.OverCap(Some(n)) => n
+    case FrameStore.OverCap(None) =>
+      val (key, vac) = liveKey()
+      val complete = vac >= key._2 || {
+        val r = log.agg(max("commitSeq")).head
+        (if (r.isNullAt(0)) -1L else r.getLong(0)) >= key._2
+      }
+      val n = latestActiveAsOf(None).count()
+      liveCache match {
+        case Some((k, FrameStore.OverCap(None))) if complete && k == key =>
+          liveCache = Some((key, FrameStore.OverCap(Some(n))))
+        case _ => ()
+      }
+      n
+  }
 
-  private def appendFrames(frames: Seq[Frame],
-                           liveDelta: Option[Long] = None): Unit = {
+  private def appendFrames(frames: Seq[Frame], put: Boolean = false): Unit = {
     val preW = persistedWatermark
     // persist the minted watermark BEFORE the rows land (same locked
     // section): a crash between the two steps then wastes an id block (a
@@ -211,15 +255,21 @@ final class FrameStore(spark: SparkSession, path: String,
     // and re-opens. One file per commit is also the reference's WAL
     // segment shape.
     frames.toDS().coalesce(1).write.mode(SaveMode.Append).parquet(path)
-    // roll the live-count cache forward only when it was current as of
-    // the pre-mutation watermark AND the caller knows the exact delta
-    // (put: every appended frame is new + Active); otherwise drop it
-    liveCountCache = for {
-      d <- liveDelta
-      (k, c) <- liveCountCache
-      if k == preW
+    // roll the live view forward only when it was current as of the
+    // pre-mutation key AND the commit is a put (every appended frame is
+    // new, Active and supersedes nothing, so it only adds keys);
+    // otherwise drop it and let the next read refill
+    liveCache = for {
+      (k, st) <- liveCache
+      if put && k == ((mutationEpoch, preW))
       nw <- counters.map(_._2)
-    } yield (nw, c + d)
+      next <- st match {
+        case FrameStore.Held(keys) =>
+          Some(keys.plus(frames.map(f => (f.id, f.commitSeq))))
+            .filter(_.size <= liveCap).map(FrameStore.Held)
+        case FrameStore.OverCap(n) => Some(FrameStore.OverCap(n.map(_ + frames.size)))
+      }
+    } yield ((mutationEpoch + 1, nw), next)
     // roll the dedup-hash cache forward the same way: every appended
     // Active row's hash joins the set (tombstones carry no hash); a
     // foreign commit in between keys the cache stale instead
@@ -270,17 +320,17 @@ final class FrameStore(spark: SparkSession, path: String,
     val set = hashCache match {
       case Some((cw, cv, s)) if cw == w && cv == vac => Some(s)
       case _ =>
-        // rebuild if the active-hash population is cacheable; the
-        // limit+1 probe bounds the collect regardless of store size
-        val rows = log.filter($"status" === Frame.Active && $"sourceSha256".isNotNull)
-          .select($"sourceSha256").distinct()
-          .limit(FrameStore.HashCacheMax + 1).as[String].collect()
-        if (rows.length <= FrameStore.HashCacheMax) {
-          val s = scala.collection.mutable.HashSet.empty[String]
-          s ++= rows
-          hashCache = Some((w, vac, s))
-          Some(s)
-        } else { hashCache = None; None }
+        // rebuild if the active-hash population is cacheable
+        graft.ops.Bounded.collectAtMost(
+            log.filter($"status" === Frame.Active && $"sourceSha256".isNotNull)
+              .select($"sourceSha256").distinct(), FrameStore.HashCacheMax) match {
+          case Some(rows) =>
+            val s = scala.collection.mutable.HashSet.empty[String]
+            s ++= rows.iterator.map(_.getString(0))
+            hashCache = Some((w, vac, s))
+            Some(s)
+          case None => hashCache = None; None
+        }
     }
     set match {
       case Some(s) => hashes.distinct.filterNot(s.contains).toSet
@@ -349,7 +399,7 @@ final class FrameStore(spark: SparkSession, path: String,
       } else Nil
       doc +: children
     }
-    appendFrames(frames, liveDelta = Some(frames.size.toLong))
+    appendFrames(frames, put = true)
     frames.filter(_.role == "document").map(_.id)
   }
 
@@ -398,14 +448,26 @@ final class FrameStore(spark: SparkSession, path: String,
     }
 
   /** When set, `latestActive` serves this read-optimized parquet copy
-    * instead of recomputing the window + anti-join per read. Any mutation
-    * invalidates it (the log has moved past the copy). */
+    * instead of the log. Any mutation by this handle invalidates it (the
+    * log has moved past the copy). */
   private var currentSnapshot: Option[DataFrame] = None
 
   /** current state: newest version per id, active only, superseded hidden.
-    * Served from the pinned snapshot when one is live ([[snapshotCurrent]]) —
-    * a plain parquet scan instead of two shuffles. */
-  def latestActive: DataFrame = currentSnapshot.getOrElse(latestActiveAsOf(None))
+    * In order of precedence:
+    *  - the pinned [[snapshotCurrent]] copy, a plain parquet scan;
+    *  - with the live keys held ([[liveState]]), the log filtered by one
+    *    `in_live_version(id, commitSeq)` predicate: a narrow scan with no
+    *    Exchange. It keeps the same rows as the window plan because
+    *    `(id, commitSeq)` is unique in the log and a live key names
+    *    exactly the row the window keeps for its id;
+    *  - over the cap, the window plan: a per-id row_number window and a
+    *    `supersedes` anti-join, two shuffles per read. */
+  def latestActive: DataFrame = currentSnapshot.getOrElse(liveState match {
+    case FrameStore.Held(keys) =>
+      graft.functions.F.ensureRegistered(spark)
+      log.toDF.filter(keys.filter)
+    case FrameStore.OverCap(_) => latestActiveAsOf(None)
+  })
 
   /** F7 time travel: state as of a commitSeq */
   def asOf(commitSeq: Long): DataFrame = latestActiveAsOf(Some(commitSeq))
@@ -423,8 +485,8 @@ final class FrameStore(spark: SparkSession, path: String,
   }
 
   /** Materialize the latest-active view as a read-optimized parquet copy,
-    * leaving the log (and so as-of history) intact. Computing the view on
-    * the fly costs two shuffles per read — the per-id window plus the
+    * leaving the log (and so as-of history) intact. Over the live-key cap
+    * the view costs two shuffles per read — the per-id window plus the
     * supersedes anti-join — which is fine for one query and wasteful for
     * a curation run that reads "current" dozens of times: pay the two
     * shuffles once, then every consumer scans a plain table. At 100 TB,
@@ -441,7 +503,8 @@ final class FrameStore(spark: SparkSession, path: String,
     * ask, timeline, embeddings, the whole curation surface — scans the
     * parquet copy until a mutation lands or [[releaseSnapshot]] is called.
     * This is the multi-read consumer of [[materializeCurrent]]: a curation
-    * run that reads "current" N times pays the window + anti-join once. */
+    * run that reads "current" N times pays the window + anti-join once
+    * (below the cap, reads are a filtered log scan without it anyway). */
   def snapshotCurrent(outPath: String): DataFrame = {
     val df = materializeCurrent(outPath)
     currentSnapshot = Some(df)
@@ -493,6 +556,7 @@ final class FrameStore(spark: SparkSession, path: String,
     // — the dedup-hash population changed, so the cache must re-derive
     // (lastVacuumSeq, the cache's second key, advanced in the same swap)
     hashCache = None
+    liveCache = None
     mutationEpoch += 1
   }
 
@@ -519,6 +583,57 @@ object FrameStore {
   /** dedup-hash cache population bound — past this, puts fall back to
     * the anti-join plan (the log-side set stays distributed) */
   private[store] val HashCacheMax = 200000
+
+  /** the live view's state on one store key */
+  private[store] sealed trait LiveState
+  /** live version keys held on the driver */
+  private[store] final case class Held(keys: LiveKeys) extends LiveState
+  /** the log is over the cap: reads use the window plan; the live count
+    * once computed */
+  private[store] final case class OverCap(count: Option[Long]) extends LiveState
+
+  /** The live version keys: ids ascending, with each id's live commitSeq
+    * in the parallel array. */
+  private[store] final class LiveKeys private (ids: Array[Long], seqs: Array[Long]) {
+    def size: Int = ids.length
+
+    /** the keys plus versions a put appended (ids not yet in the set) */
+    def plus(added: Seq[(Long, Long)]): LiveKeys =
+      LiveKeys(ids ++ added.map(_._1), seqs ++ added.map(_._2))
+
+    /** the log rows these keys name (built once: the literal arrays
+      * convert once per key set, not once per read) */
+    lazy val filter: org.apache.spark.sql.Column =
+      graft.functions.F.inLiveVersion(col("id"), col("commitSeq"), ids, seqs)
+  }
+
+  private[store] object LiveKeys {
+    def apply(ids: Array[Long], seqs: Array[Long]): LiveKeys = {
+      val (i, s) = graft.functions.InLiveVersionExpr.sortedKeys(ids, seqs)
+      new LiveKeys(i, s)
+    }
+
+    /** the live keys of log rows `(id, commitSeq, active, supersedes)`:
+      * per id the newest row, kept when it is active and no row of the
+      * log supersedes its id — the window plan's rule */
+    def derive(rows: Array[org.apache.spark.sql.Row]): LiveKeys = {
+      val newest = scala.collection.mutable.LongMap.empty[Int]
+      val superseded = scala.collection.mutable.LongMap.empty[Unit]
+      var i = 0
+      while (i < rows.length) {
+        val r = rows(i)
+        val id = r.getLong(0)
+        if (newest.get(id).forall(j => rows(j).getLong(1) < r.getLong(1)))
+          newest(id) = i
+        if (!r.isNullAt(3)) superseded(r.getLong(3)) = ()
+        i += 1
+      }
+      val live = newest.iterator.collect {
+        case (id, j) if rows(j).getBoolean(2) && !superseded.contains(id) => j
+      }.toArray
+      LiveKeys(live.map(rows(_).getLong(0)), live.map(rows(_).getLong(1)))
+    }
+  }
 
   /** Mutation-lock defaults: patient acquire (a contending writer WAITS
     * for a live peer's commit rather than erroring — commits are seconds,

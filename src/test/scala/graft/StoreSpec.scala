@@ -84,14 +84,20 @@ class StoreSpec extends SparkSpec {
     store.update(a, "alpha version two", "mv2://a")
     store.delete(b)
     val liveBefore = store.latestActive.select("id").collect().map(_.getLong(0)).toSet
-    // live view recomputes: window + anti-join in every read's plan
-    assert(store.latestActive.queryExecution.executedPlan.toString.contains("Window"))
+    // which copy a read scans: every input file under one directory
+    def scans(sub: String): Boolean = {
+      val files = store.latestActive.inputFiles
+      files.nonEmpty && files.forall(_.contains(s"$dir/$sub/"))
+    }
+    // unpinned, the live view is computed from the log on every read
+    assert(scans("frames"))
     store.snapshotCurrent(s"$dir/current")
     // every read while pinned is a plain parquet scan — the two shuffles
     // were paid once at materialization
     (1 to 3).foreach { _ =>
       val plan = store.latestActive.queryExecution.executedPlan.toString
       assert(!plan.contains("Window") && !plan.toLowerCase.contains("anti"))
+      assert(scans("current"))
     }
     assert(store.latestActive.select("id").collect().map(_.getLong(0)).toSet
       == liveBefore)
@@ -99,11 +105,14 @@ class StoreSpec extends SparkSpec {
     val Seq(c) = store.put(Seq(("mv2://c", "gamma arrives")), ts = ts(2000))
     val afterIds = store.latestActive.select("id").collect().map(_.getLong(0)).toSet
     assert(afterIds == liveBefore + c)
-    assert(store.latestActive.queryExecution.executedPlan.toString.contains("Window"))
+    assert(scans("frames"))
     // explicit release also unpins
     store.snapshotCurrent(s"$dir/current2")
+    assert(scans("current2"))
     store.releaseSnapshot()
-    assert(store.latestActive.queryExecution.executedPlan.toString.contains("Window"))
+    assert(scans("frames"))
+    assert(store.latestActive.select("id").collect().map(_.getLong(0)).toSet
+      == liveBefore + c)
   }
 
   test("graft facade: snapshotCurrent serves search/ask surface from the copy") {
