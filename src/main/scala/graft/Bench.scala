@@ -48,21 +48,29 @@ object Bench {
     isolate()
     // SPARK_GRAFT_ONLY=q1,q2 restricts the run (local iteration aid)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // a gate that throws still counts its elapsed time (the totals keep
+    // their meaning), but it is named on stderr and in the per-gate file
+    // so a broken gate cannot pass for a fast one
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def time(name: String): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      try { SparkEntry.queries(name)(spark, sfDir).count() } catch { case e: Throwable =>
+        if (failed.add(name))
+          System.err.println(s"[bench] gate $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
+        -1L
+      }
       val dt = (System.nanoTime() - t0) / 1e9
       isolate()
       dt
     }
     val first = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) => name -> time(fn) }.toMap
+      .map { case (name, _) => name -> time(name) }.toMap
     // contention hygiene: the 10 slowest get a second run and report the
     // min — a contended machine (r4's recorded bench ran 2.9x slow) shows
     // up as one-off spikes that a single re-run flattens
     val rerun = first.toSeq.sortBy(-_._2).take(10).map { case (name, t1) =>
-      name -> math.min(t1, time(SparkEntry.queries(name)))
+      name -> math.min(t1, time(name))
     }
     val results = first ++ rerun
     val total = if (results.nonEmpty) results.values.sum else 0.0
@@ -75,7 +83,7 @@ object Bench {
     // comparability; steady_total/steady_spq are additive.
     val steady = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) => name -> time(fn) }.toMap
+      .map { case (name, _) => name -> time(name) }.toMap
     val steadyTotal = if (steady.nonEmpty) steady.values.sum else 0.0
     val steadySpq = if (steady.nonEmpty) steadyTotal / steady.size else 0.0
     // per-gate min across BOTH passes: the ambient-robust number — a
@@ -93,8 +101,10 @@ object Bench {
       def m(mp: Map[String, Double]) = mp.toSeq.sortBy(_._1)
         .map { case (k, v) => "\"" + k + "\":" + BigDecimal(v)
           .setScale(3, BigDecimal.RoundingMode.HALF_UP) }.mkString("{", ",", "}")
+      val failedNames = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
       java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        s"""{"first":${m(results)},"steady":${m(steady)}}""".getBytes("UTF-8"))
+        s"""{"first":${m(results)},"steady":${m(steady)},"failed":$failedNames}"""
+          .getBytes("UTF-8"))
     }
     // The driver keeps only the LAST ~2000 chars of sbt output and parses
     // the JSON line from that tail; sbt's own "[success] Total time" line

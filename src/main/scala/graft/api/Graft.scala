@@ -19,9 +19,12 @@ import org.apache.spark.sql.functions._
   *        (src/memvid/search/builders.rs:12-44: a put updates the
   *        engine WITHIN the commit): every facade put() immediately
   *        catches attached serving indexes up via
-  *        [[Graft.refreshLexIndex]]/[[Graft.refreshVecIndex]] — an
-  *        O(delta) append per put, and append-only workloads never
-  *        leave the indexed route. Off by default: batch pipelines
+  *        [[Graft.refreshLexIndex]]/[[Graft.refreshVecIndex]]/
+  *        [[Graft.refreshSketchTable]] — an O(delta) append per put, and
+  *        append-only workloads never leave the indexed route. The delta
+  *        is the put's own rows, still held on the driver, so no refresh
+  *        scans or re-reads the log (the same holds for an explicit
+  *        refresh right after the put). Off by default: batch pipelines
   *        prefer one refresh per ingest epoch over one per put.
   * @param healOnRead the read-side symmetry of the same idea (the
   *        reference's lazy engine init, search/mod.rs:47-57: a read
@@ -378,7 +381,9 @@ final class Graft(val spark: SparkSession, basePath: String,
       Seq("doc_id"), "left_semi")
 
   /** Catch the attached sketch table up to the store: sketches of the
-    * post-stamp ACTIVE frames append, then the stamp advances. Always
+    * post-stamp ACTIVE frames append, then the stamp advances (right
+    * after this handle's own put, from its held rows — see
+    * [[FrameStore.ownDelta]] — without reading the log). Always
     * O(delta) — dead versions' rows are inert (see the section comment),
     * so unlike the lex/vec refresh there is no delete/supersede rebuild
     * case (only a missing/never-stamped/torn table rebuilds).
@@ -416,9 +421,10 @@ final class Graft(val spark: SparkSession, basePath: String,
           if (!pending && stamp.contains(cur)) "fresh"
           else if (stamp.isEmpty || pending) "needs_rebuild"
           else {
-            val delta = frames.log.filter(
-                col("commitSeq") > stamp.get && col("commitSeq") <= cur)
-              .filter(col("status") === graft.model.Frame.Active)
+            val delta = frames.ownDelta(stamp.get, cur).map(_.toDF())
+              .getOrElse(frames.log.filter(
+                  col("commitSeq") > stamp.get && col("commitSeq") <= cur)
+                .filter(col("status") === graft.model.Frame.Active).toDF())
               .select(col("id"), coalesce(col("text"), lit("")).as("text"))
             spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
               "('graft.refresh.pending' = '1')")
@@ -535,6 +541,16 @@ final class Graft(val spark: SparkSession, basePath: String,
   // corpus/delta ratio: one put() no longer costs a corpus-sized
   // rebuild to restore indexed serving.
   //
+  // Hit vs miss: when the delta is exactly this handle's last put — the
+  // stamp is the watermark that put read, the store is at the watermark
+  // it minted, nothing else moved ([[FrameStore.ownDelta]]) — the delta
+  // is append-only by construction and its rows are on the driver: no
+  // classification scan, no log re-read, and the vec leg embeds on the
+  // driver. Anything else (a foreign commit, several puts before one
+  // refresh, an update/delete, a vacuum) misses and classifies from the
+  // log as below; the marker, lock and restamp order are the same on
+  // both paths.
+  //
   // Torn-refresh safety: a 'refresh pending' marker lands BEFORE the
   // append and clears only after (lex: in the same ALTER as; vec:
   // after) the restamp. A crash between append and restamp leaves the
@@ -568,19 +584,6 @@ final class Graft(val spark: SparkSession, basePath: String,
          meta.exists(_.properties.get("graft.refresh.pending").contains("1")),
          meta.flatMap(_.bucketSpec.map(_.numBuckets)).getOrElse(16))
       }
-      // a vacuum AFTER the stamp purged the very rows this classification
-      // reads (a deleted doc's tombstone vanishes from the log, the delta
-      // looks empty/append-only, and an append would restamp an index
-      // still carrying the ghost postings) — the log cannot answer, so
-      // rebuild. `lastVacuumSeq == stampV` is safe: the index was current
-      // at the vacuum and compaction is value-neutral for the live view.
-      def breaksAppend(stampV: Long, cur: Long): Boolean =
-        frames.lastVacuumSeq > stampV ||
-        frames.log.filter(
-            col("commitSeq") > stampV && col("commitSeq") <= cur)
-          .filter(col("status") =!= graft.model.Frame.Active ||
-            col("supersedes").isNotNull)
-          .limit(1).count() > 0
       def rebuild(nBuckets: Int): String = {
         buildLexIndex(table, stemmed, nBuckets)
         spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
@@ -602,7 +605,7 @@ final class Graft(val spark: SparkSession, basePath: String,
       // torn.
       if (!pending0 && stamp0.contains(cur0)) "fresh"
       else if (exists0 && !pending0 && stamp0.isDefined &&
-               breaksAppend(stamp0.get, cur0)) rebuild(nb0)
+               catchUp(stamp0.get, cur0) == Graft.Rebuild) rebuild(nb0)
       else {
         // the append leg is ATOMIC under the table's maintenance lock,
         // RE-classified inside it: two maintainers racing one stale
@@ -611,15 +614,14 @@ final class Graft(val spark: SparkSession, basePath: String,
         val outcome = graft.search.Bm25Index.maintenanceLock(spark, table) {
           val cur = currentVersion
           val (exists, stamp, pending, nb) = snapshot()
+          lazy val how = stamp.filter(_ => exists && !pending).map(catchUp(_, cur))
           if (!pending && stamp.contains(cur)) "fresh"
-          else if (!exists || stamp.isEmpty || pending ||
-                   breaksAppend(stamp.get, cur)) "needs_rebuild"
+          else if (how.forall(_ == Graft.Rebuild)) "needs_rebuild"
           else {
             // bound the delta by BOTH stamps so the restamp covers
             // exactly the appended rows even if a foreign writer
             // commits mid-refresh
-            val delta = frames.log.filter(
-              col("commitSeq") > stamp.get && col("commitSeq") <= cur)
+            val delta = deltaFrames(how.get, stamp.get, cur)
             spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
               "('graft.refresh.pending' = '1')")
             // a track-partitioned table's delta must land in the right
@@ -643,6 +645,37 @@ final class Graft(val spark: SparkSession, basePath: String,
       }
   }
 
+  /** How an artifact stamped at `stamp` catches up to `cur`. When
+    * `(stamp, cur]` is exactly this handle's last put, from its rows held
+    * on the driver ([[FrameStore.ownDelta]]: append-only by construction,
+    * no scan). Otherwise one limit(1) scan of the log's delta decides:
+    * a tombstone or a superseding version invalidates indexed rows, so
+    * rebuild. So does a vacuum AFTER the stamp: it purged the very rows
+    * this scan reads (a deleted doc's tombstone vanishes, the delta looks
+    * append-only, and an append would restamp an index still carrying
+    * the ghost postings). `lastVacuumSeq == stamp` is safe: the artifact
+    * was current at the vacuum and compaction is value-neutral for the
+    * live view. */
+  private def catchUp(stamp: Long, cur: Long): Graft.CatchUp =
+    frames.ownDelta(stamp, cur) match {
+      case Some(rows) => Graft.OwnRows(rows)
+      case None if frames.lastVacuumSeq > stamp ||
+          frames.log.filter(col("commitSeq") > stamp && col("commitSeq") <= cur)
+            .filter(col("status") =!= graft.model.Frame.Active ||
+              col("supersedes").isNotNull)
+            .limit(1).count() > 0 => Graft.Rebuild
+      case None => Graft.LogRows
+    }
+
+  /** the frames an append-only catch-up adds: the held rows as a local
+    * relation, or the log's `(stamp, cur]` rows */
+  private def deltaFrames(how: Graft.CatchUp, stamp: Long, cur: Long): DataFrame =
+    how match {
+      case Graft.OwnRows(rows) => rows.toDF()
+      case _ => frames.log.filter(
+        col("commitSeq") > stamp && col("commitSeq") <= cur).toDF()
+    }
+
   /** Can the stamped postings table catch up by APPEND? — the doctor's
     * plan-time probe, the same classification [[refreshLexIndex]] runs:
     * true = the post-stamp delta is append-only; false = a rebuild is
@@ -651,13 +684,7 @@ final class Graft(val spark: SparkSession, basePath: String,
     * commitSeq-filtered log. */
   private[api] def lexDeltaAppendable(table: String): Boolean =
     tableStamp(table) match {
-      case Some((Some(stamp), false)) =>
-        frames.lastVacuumSeq <= stamp && // else the log is purged past the stamp
-        frames.log.filter(
-            col("commitSeq") > stamp && col("commitSeq") <= currentVersion)
-          .filter(col("status") =!= graft.model.Frame.Active ||
-            col("supersedes").isNotNull)
-          .limit(1).count() == 0
+      case Some((Some(stamp), false)) => catchUp(stamp, currentVersion) != Graft.Rebuild
       case _ => false // missing table, unparseable stamp or torn refresh
     }
 
@@ -745,17 +772,12 @@ final class Graft(val spark: SparkSession, basePath: String,
     * [[lexDeltaAppendable]] (same classification [[refreshVecIndex]]
     * runs): false on a missing/unparseable stamp, a torn-refresh marker,
     * deletes/supersedes in the delta, or a vacuum past the stamp. */
-  private[api] def vecDeltaAppendable(path: String): Boolean = {
-    if (!graft.vector.IvfIndex.exists(spark, path)) return false
-    val stamp = readVecStamp(path)
-    if (stamp.isEmpty || hfs(path).exists(vecPendingPath(path))) false
-    else if (frames.lastVacuumSeq > stamp.get) false
-    else frames.log.filter(
-        col("commitSeq") > stamp.get && col("commitSeq") <= currentVersion)
-      .filter(col("status") =!= graft.model.Frame.Active ||
-        col("supersedes").isNotNull)
-      .limit(1).count() == 0
-  }
+  private[api] def vecDeltaAppendable(path: String): Boolean =
+    graft.vector.IvfIndex.exists(spark, path) && {
+      val stamp = readVecStamp(path)
+      !hfs(path).exists(vecPendingPath(path)) &&
+        stamp.exists(catchUp(_, currentVersion) != Graft.Rebuild)
+    }
 
   /** [[vecServingHandle]] with the [[healOnRead]] rung — see
     * [[lexFreshOrHealed]] for the contract */
@@ -797,14 +819,6 @@ final class Graft(val spark: SparkSession, basePath: String,
       def snapshot(): (Boolean, Option[Long], Boolean) =
         (graft.vector.IvfIndex.exists(spark, path), readVecStamp(path),
          fs.exists(vecPendingPath(path)))
-      // vacuum-blindness guard — see refreshLexIndex's breaksAppend
-      def breaksAppend(stampV: Long, cur: Long): Boolean =
-        frames.lastVacuumSeq > stampV ||
-        frames.log.filter(
-            col("commitSeq") > stampV && col("commitSeq") <= cur)
-          .filter(col("status") =!= graft.model.Frame.Active ||
-            col("supersedes").isNotNull)
-          .limit(1).count() > 0
       def rebuild(exists: Boolean): String = {
         val k = if (exists)
           graft.vector.IvfIndex.read(spark, path).centroids.size else 4
@@ -820,33 +834,39 @@ final class Graft(val spark: SparkSession, basePath: String,
       // the lock, or a peer's in-flight append reads as torn)
       if (exists0 && !pending0 && stamp0.contains(cur0)) "fresh"
       else if (exists0 && !pending0 && stamp0.isDefined &&
-               breaksAppend(stamp0.get, cur0)) rebuild(exists0)
+               catchUp(stamp0.get, cur0) == Graft.Rebuild) rebuild(exists0)
       else {
         // ATOMIC append leg (see refreshLexIndex): re-classify under the
         // index's maintenance lock so racing maintainers serialize
         val outcome = graft.vector.IvfIndex.maintenanceLock(spark, path) {
           val cur = currentVersion
           val (exists, stamp, pending) = snapshot()
+          lazy val how = stamp.filter(_ => exists && !pending).map(catchUp(_, cur))
           if (exists && !pending && stamp.contains(cur)) "fresh"
-          else if (!exists || stamp.isEmpty || pending ||
-                   breaksAppend(stamp.get, cur)) "needs_rebuild"
+          else if (how.forall(_ == Graft.Rebuild)) "needs_rebuild"
           else {
-            val delta = frames.log.filter(
-              col("commitSeq") > stamp.get && col("commitSeq") <= cur)
             val e = activeEmbedder
-            val embedUdf = udf((t: String) => e.embed(if (t == null) "" else t))
             // the vector index covers DOCUMENT frames only (same
             // population as embeddingsTable); delta is driver-small
-            val deltaVecs = delta.filter(col("role") === "document")
-              .select(col("id"),
-                embedUdf(coalesce(col("text"), lit(""))).as("vector"))
-              .localCheckpoint()
+            val deltaVecs = how.get match {
+              case Graft.OwnRows(rows) => // the texts are on the driver
+                val docs = rows.filter(_.role == "document")
+                Option.when(docs.nonEmpty)(docs.map(r => (r.id, e.embed(r.text)))
+                  .toDF("id", "vector"))
+              case logRows =>
+                val embedUdf = udf((t: String) => e.embed(if (t == null) "" else t))
+                Some(deltaFrames(logRows, stamp.get, cur)
+                  .filter(col("role") === "document")
+                  .select(col("id"),
+                    embedUdf(coalesce(col("text"), lit(""))).as("vector"))
+                  .localCheckpoint()).filterNot(_.isEmpty)
+            }
             if (deltaVecs.isEmpty) {
               val out = fs.create(vecStampPath(path), true)
               out.write(cur.toString.getBytes("UTF-8")); out.close()
             } else {
               fs.create(vecPendingPath(path), true).close()
-              graft.vector.IvfIndex.appendUnlocked(spark, path, deltaVecs,
+              graft.vector.IvfIndex.appendUnlocked(spark, path, deltaVecs.get,
                 "id", "vector"): Unit
               // restamp FIRST, then clear the marker: a crash in between
               // costs one spurious rebuild, never a double-append
@@ -1430,6 +1450,16 @@ final class Graft(val spark: SparkSession, basePath: String,
 }
 
 object Graft {
+  /** how a serving artifact catches up to the store (see `catchUp`) */
+  private sealed trait CatchUp
+  /** the delta is this handle's last put: its rows, held on the driver */
+  private final case class OwnRows(rows: Seq[graft.store.FrameStore.ServingRow])
+    extends CatchUp
+  /** append-only: read the delta from the log */
+  private case object LogRows extends CatchUp
+  /** the append contract is broken: rebuild */
+  private case object Rebuild extends CatchUp
+
   /** the cards table's on-disk schema (every writer emits this shape) */
   private[api] val cardsSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._

@@ -27,7 +27,8 @@ object Rerank {
   /** Lexical-AND first stage + BM25 pool rescore. `tokens` is the corpus
     * token table (doc_id, term) — typically the EdgeCache-shared unstemmed
     * BM25 table; only the candidate pool's rows are read from it.
-    * @return (doc_id, original_rank, new_rank, score) ordered by new_rank
+    * @return (doc_id, original_rank, new_rank, score) ordered by new_rank;
+    *         `doc_id` has the type of `docs`' id column
     */
   def bm25(docs: DataFrame, idCol: String, textCol: String,
            tokens: DataFrame, query: String,
@@ -35,6 +36,7 @@ object Rerank {
            minScore: Double = 0.0): DataFrame = {
     import org.apache.spark.sql.types._
     val spark = docs.sparkSession
+    val idType = docs.schema(idCol).dataType
     // Stage-1 pool is ≤ maxCandidates rows and ALREADY globally sorted by
     // (score desc, id) — rank it on the driver (r20): the former
     // unpartitioned row_number Window moved the page to one partition
@@ -44,12 +46,12 @@ object Rerank {
     val candRows = Lexical.search(docs, idCol, textCol, query,
       topK = maxCandidates).collect()
     val origRank = candRows.iterator.zipWithIndex
-      .map { case (r, i) => r.getLong(0) -> (i + 1) }.toMap
+      .map { case (r, i) => r.get(0) -> (i + 1) }.toMap
     val cands = spark.createDataFrame(
       java.util.Arrays.asList(candRows.iterator.zipWithIndex.map {
-        case (r, i) => org.apache.spark.sql.Row(r.getLong(0), i + 1)
+        case (r, i) => org.apache.spark.sql.Row(r.get(0), i + 1)
       }.toArray: _*),
-      StructType(Seq(StructField("doc_id", LongType),
+      StructType(Seq(StructField("doc_id", idType),
         StructField("original_rank", IntegerType))))
     val poolToks = tokens.join(cands.select("doc_id"), Seq("doc_id"), "left_semi")
     val terms = query.toLowerCase.trim.split("\\s+").filter(_.nonEmpty).toSeq
@@ -59,11 +61,11 @@ object Rerank {
       .filter(col("score") >= minScore)
       .select(col("doc_id"), col("score")).collect()
     val out = rescored.iterator.zipWithIndex.take(topK).map { case (r, i) =>
-      org.apache.spark.sql.Row(r.getLong(0), origRank(r.getLong(0)),
+      org.apache.spark.sql.Row(r.get(0), origRank(r.get(0)),
         i + 1, r.getDouble(1))
     }.toArray
     spark.createDataFrame(java.util.Arrays.asList(out: _*),
-      StructType(Seq(StructField("doc_id", LongType),
+      StructType(Seq(StructField("doc_id", idType),
         StructField("original_rank", IntegerType),
         StructField("new_rank", IntegerType),
         StructField("score", DoubleType))))

@@ -36,6 +36,13 @@ import org.apache.spark.sql.functions._
   * cached only once the log shows the watermark's commit (see
   * [[liveState]]). A pinned [[snapshotCurrent]] copy is the exception:
   * only this handle's own mutations unpin it.
+  *
+  * The last put commit this handle wrote is held too: its frames' narrow
+  * serving rows (id, role, track, text — no payload), keyed on the
+  * watermark it read, the one it minted and the mutation epoch after it.
+  * The next put replaces it; update, delete, vacuum and a put over the
+  * live-key cap drop it. The serving artifacts catch up from these rows
+  * instead of re-scanning the log ([[ownDelta]]).
   */
 final class FrameStore(spark: SparkSession, path: String,
                        lockOptions: StoreLock.Options =
@@ -283,9 +290,30 @@ final class FrameStore(spark: SparkSession, path: String,
       (nw, v, s)
     }
     if (hashCache.exists(_._3.size > FrameStore.HashCacheMax)) hashCache = None
+    // hold a put's serving rows for the artifacts' catch-up ([[ownDelta]]);
+    // any other commit, or a put over the cap, holds nothing
+    lastPut = for {
+      nw <- counters.map(_._2)
+      if put && frames.size <= liveCap
+    } yield FrameStore.OwnCommit(preW, nw, mutationEpoch + 1, frames.map(f =>
+      FrameStore.ServingRow(f.id, f.role, f.track, f.text.getOrElse(""))))
     currentSnapshot = None // the pinned copy no longer reflects the log
     mutationEpoch += 1
   }
+
+  /** the narrow serving rows of the last put this handle committed */
+  @volatile private var lastPut: Option[FrameStore.OwnCommit] = None
+
+  /** The rows of the commits `(stamp, cur]` when they are exactly this
+    * handle's last put: `stamp` is the watermark the put read, `cur` the
+    * one it minted, no mutation of this handle followed, the persisted
+    * watermark is still `cur` and no vacuum ran past `stamp` (both from
+    * one `_graft_seq` read). Such a delta is append-only by construction:
+    * every row is a new Active frame that supersedes nothing. None
+    * otherwise — the caller classifies the delta from the log. */
+  private[graft] def ownDelta(stamp: Long, cur: Long): Option[Seq[FrameStore.ServingRow]] =
+    lastPut.filter(c => c.preW == stamp && c.newW == cur && c.epoch == mutationEpoch &&
+      readSeqFile().exists { case (_, w, vac) => w == cur && vac <= stamp }).map(_.rows)
 
   /** J8 dedup plan: stage the incoming batch's hashes and left-anti join
     * them against the live log on sourceSha256 (reference BLAKE3 dedup
@@ -557,6 +585,7 @@ final class FrameStore(spark: SparkSession, path: String,
     // (lastVacuumSeq, the cache's second key, advanced in the same swap)
     hashCache = None
     liveCache = None
+    lastPut = None
     mutationEpoch += 1
   }
 
@@ -583,6 +612,14 @@ object FrameStore {
   /** dedup-hash cache population bound — past this, puts fall back to
     * the anti-join plan (the log-side set stays distributed) */
   private[store] val HashCacheMax = 200000
+
+  /** what the serving artifacts index of one frame */
+  private[graft] final case class ServingRow(id: Long, role: String, track: Option[String], text: String)
+
+  /** a put commit: the watermark it read and the one it minted, the
+    * mutation epoch after it, and its frames' serving rows */
+  private[store] final case class OwnCommit(preW: Long, newW: Long, epoch: Long,
+                                     rows: Seq[ServingRow])
 
   /** the live view's state on one store key */
   private[store] sealed trait LiveState

@@ -2,15 +2,18 @@ package graft
 
 import graft.api.Graft
 
-/** Spark-job ceilings for warm serving calls on a small indexed store
-  * (lex, sketch and vec attached). A change that adds a job to a warm
-  * `search` or `ask` fails here instead of hiding in benchmark noise;
-  * a change that removes jobs lowers the ceiling to its new count. */
+/** Spark-job ceilings for warm serving calls and for an own-commit put
+  * with its catch-up, on a small indexed store (lex, sketch and vec
+  * attached). A change that adds a job fails here instead of hiding in
+  * benchmark noise; a change that removes jobs lowers the ceiling to its
+  * new count. */
 class JobBudgetSpec extends SparkSpec {
 
   /** ceilings: the counts measured when each was last lowered */
   private val SearchJobs = 5
   private val AskJobs = 4
+  /** a put plus the lex, sketch and vec catch-up from its held rows */
+  private val PutRefreshJobs = 7
 
   private def jobs(run: => Unit): Int = {
     val sc = spark.sparkContext
@@ -21,9 +24,12 @@ class JobBudgetSpec extends SparkSpec {
     sc.statusTracker.getJobIdsForGroup(group).length
   }
 
-  test("warm default search and ask stay within their job budgets") {
+  private val lex = "job_budget_spec_lex"
+  private val skt = "job_budget_spec_sk"
+
+  /** a 60-doc, four-track store with all three artifacts built */
+  private def withStore(body: (Graft, String) => Unit): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("graft_job_budget").toString
-    val lex = "job_budget_spec_lex"; val skt = "job_budget_spec_sk"
     def drop(): Unit = Seq(lex, skt).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
     drop()
     try {
@@ -38,6 +44,15 @@ class JobBudgetSpec extends SparkSpec {
       g.buildLexIndex(lex, stemmed = true, partitionByTrack = true)
       g.buildSketchTable(skt)
       g.buildVecIndex(s"$dir/vec", k = 2, iters = 1, nprobe = 2)
+      body(g, dir)
+    } finally drop()
+  }
+
+  /** a note whose fact sentence mints a memory card, as an agent's is */
+  private def note(i: Int) = s"Budget note $i on harbor tides. Ada Lovelace works at Acme$i."
+
+  test("warm default search and ask stay within their job budgets") {
+    withStore { (g, _) =>
       val q = "river sediment"
       val question = "what do the notes say about orchard pruning?"
       // warm: the first calls on this watermark fill the serving caches
@@ -52,6 +67,36 @@ class JobBudgetSpec extends SparkSpec {
       info(s"warm search: $search jobs, warm ask: $ask jobs")
       assert(search <= SearchJobs, s"warm search ran $search jobs (budget $SearchJobs)")
       assert(ask <= AskJobs, s"warm ask ran $ask jobs (budget $AskJobs)")
-    } finally drop()
+    }
+  }
+
+  test("an own-commit put and its three refreshes stay within their job budget") {
+    withStore { (g, _) =>
+      g.put("mv2://budget/warm", note(0)) // fills the put's dedup-hash cache
+      Seq(g.refreshLexIndex(), g.refreshSketchTable(), g.refreshVecIndex())
+      val explicit = jobs {
+        g.put("mv2://budget/explicit", note(1), track = Some("track1"))
+        assert(Seq(g.refreshLexIndex(), g.refreshSketchTable(), g.refreshVecIndex())
+          == Seq("appended", "appended", "appended"))
+      }
+      info(s"put + three refreshes: $explicit jobs")
+      assert(explicit <= PutRefreshJobs,
+        s"put + refreshes ran $explicit jobs (budget $PutRefreshJobs)")
+    }
+  }
+
+  test("a put on an autoRefreshIndexes handle stays within the same budget") {
+    withStore { (_, dir) =>
+      val g = new Graft(spark, dir, autoRefreshIndexes = true)
+      g.attachLexIndex(lex, stemmed = true)
+      g.attachSketchTable(skt)
+      g.attachVecIndex(s"$dir/vec", nprobe = 2)
+      g.put("mv2://budget/warm", note(0)) // fills the put's dedup-hash cache
+      val auto = jobs(g.put("mv2://budget/auto", note(1), track = Some("track2")): Unit)
+      info(s"auto-refreshing put: $auto jobs")
+      assert(auto <= PutRefreshJobs, s"put ran $auto jobs (budget $PutRefreshJobs)")
+      g.search("harbor tides").collect(): Unit
+      assert(g.lastSearchRoute == "indexed")
+    }
   }
 }

@@ -58,6 +58,17 @@ class RerankSpec extends SparkSpec {
     out.foreach(r => assert(r.getDouble(3) == expect))
   }
 
+  test("a String id column keeps its type through both stages") {
+    val docs = Seq(("doc-a", "spark join spark join " + ("pad " * 40)),
+      ("doc-b", "spark join"), ("doc-c", "unrelated text"))
+      .toDF("doc_id", "text")
+    val out = Rerank.bm25(docs, "doc_id", "text", toks(docs), "spark join")
+    assert(out.schema("doc_id").dataType == org.apache.spark.sql.types.StringType)
+    val rows = out.collect()
+    assert(rows.map(_.getString(0)).toSeq == Seq("doc-b", "doc-a"))
+    assert(rows.map(r => (r.getInt(1), r.getInt(2))).toSeq == Seq((2, 1), (1, 2)))
+  }
+
   test("no stage-1 matches yields an empty rerank, not a crash") {
     val docs = Seq((1L, "alpha beta"), (2L, "gamma delta"))
       .toDF("doc_id", "text")
