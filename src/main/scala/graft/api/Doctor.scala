@@ -147,9 +147,9 @@ object Doctor {
     // stamp exiles ask()'s vector rung to the corpus path until healed
     val vecStale = for {
       p <- vecPath
-      if g.attachedVec(p).isDefined
+      a <- g.attachedVec(p)
       if graft.vector.IvfIndex.exists(g.spark, p)
-      if g.vecStampStale(p)
+      if g.stampStale(a)
     } yield "vec_index_stale" -> 1L
     // append-delta debt of the persisted IVF index (one FS listing)
     val vecDelta = for {
@@ -164,10 +164,10 @@ object Doctor {
     // the degradation is PERFORMANCE, not serving: a stale sketch makes
     // search() silently skip the candidate shrink (lossless direction),
     // so severity is warning and the heal is the always-append refresh
-    // (dead rows are inert — Graft's sketch section owns that argument)
+    // (dead rows are inert — ServingArtifact owns that argument)
     val sketchStale = for {
-      t <- g.attachedSketchTable
-      if g.sketchStampStale(t)
+      a <- g.attachedSketch
+      if g.stampStale(a)
     } yield "sketch_stale" -> 1L
     // the union computed lex_index_stale / vec_index_drift counts
     // unconditionally; re-apply the presence rules they always had
@@ -254,7 +254,7 @@ object Doctor {
           // an unattached table, or a delta with deletes/supersedes
           // keeps the rebuild
           val canRefresh = !opts.rebuildLexIndex &&
-            g.attachedLexStemmed(t).isDefined && g.lexDeltaAppendable(t)
+            g.attachedLex(t).exists(g.appendable)
           Seq(row("action", "index_rebuild",
             if (canRefresh) "refresh_lex_index" else "rebuild_lex_index",
             required = true,
@@ -341,13 +341,13 @@ object Doctor {
             g.refreshLexIndex(): Unit
           case "rebuild_lex_index" =>
             lexTable.foreach { t =>
-              g.attachedLexStemmed(t) match {
+              g.attachedLex(t) match {
                 // the facade SERVES this table: rebuild through the
                 // facade's own build (live frames INCLUDING chunks, the
                 // index's own analyzer, version restamp) so serving
                 // returns to the indexed route — the maintain→serve loop
                 // the reference's doctor verify closes (doctor.rs:140-173)
-                case Some(st) => g.buildLexIndex(t, stemmed = st)
+                case Some(a) => g.buildLexIndex(t, stemmed = a.stemmed)
                 case None =>
                   // a standalone tracked table keeps its layout through
                   // the doctor rebuild (same auto-detect the facade
@@ -365,19 +365,11 @@ object Doctor {
             }
           case "compact_lex_index" =>
             lexTable.foreach { t =>
-              val meta = g.spark.sessionState.catalog.getTableMetadata(
-                org.apache.spark.sql.catalyst.TableIdentifier(t))
-              val nb = meta.bucketSpec.map(_.numBuckets).getOrElse(16)
-              // compaction is value-neutral, so the store-version stamp
-              // survives it — but the swap installs a NEW catalog table,
-              // dropping properties. Re-stamp the prior verdict after the
-              // swap; a crash in between leaves an unstamped (= stale-
-              // looking) index and serving falls back to the corpus —
-              // the safe direction, same as buildLexIndex's stamp order.
-              val stamp = meta.properties.get("graft.store.version")
-              graft.search.Bm25Index.compact(g.spark, t, nb)
-              stamp.foreach(v => g.spark.sql(
-                s"ALTER TABLE `$t` SET TBLPROPERTIES ('graft.store.version' = '$v')"))
+              // value-neutral: the swap keeps the live table's bucket
+              // spec and carries its serving stamp and torn-refresh
+              // marker (Bm25Index.compact), so only the cached serving
+              // verdicts drop
+              graft.search.Bm25Index.compact(g.spark, t)
               g.invalidateIndexCaches()
             }
           case "compact_vec_index" =>

@@ -96,9 +96,9 @@ final class Graft(val spark: SparkSession, basePath: String,
         try run catch {
           case _: graft.store.StoreLock.StoreLockedException => ()
         }
-      if (lexIndex.isDefined) bestEffort(refreshLexIndex(): Unit)
-      if (vecIndex.isDefined) bestEffort(refreshVecIndex(): Unit)
-      if (sketchTable.isDefined) bestEffort(refreshSketchTable(): Unit)
+      if (lex.isDefined) bestEffort(refreshLexIndex(): Unit)
+      if (vec.isDefined) bestEffort(refreshVecIndex(): Unit)
+      if (sketch.isDefined) bestEffort(refreshSketchTable(): Unit)
     }
     ids.headOption
   }
@@ -176,26 +176,16 @@ final class Graft(val spark: SparkSession, basePath: String,
   /** back to live-log reads */
   def releaseSnapshot(): Unit = frames.releaseSnapshot()
 
-  // ---- persisted-index serving (reference: lazy engine init opens the
-  // on-disk Tantivy segments once they exist, src/memvid/search/mod.rs:
-  // 47-57, and the vector path switches off brute force once an index is
-  // worth it, src/vec.rs:23). The Spark-native form: a bucketed BM25
-  // postings table and a generation-dir IVF index, each stamped with the
-  // store's commit version at build time. search()/ask() route through a
-  // FRESH index (stamp == current commit version) and fall back to the
-  // corpus path the moment the store moves past the stamp — results are
-  // bit-equal either way (`search_facade_indexed`/`ask_facade_indexed`
-  // gate that), the index only changes WHERE the work happens. The
-  // freshness verdict is cached per store mutation epoch, which the
-  // single-writer contract makes exact: the one writer observes every
-  // mutation it performs. ----
+  // ---- persisted-index serving: the BM25 postings table, the sketch
+  // table and the IVF index, each a [[ServingArtifact]] (stamp, torn-
+  // refresh marker, maintenance lock, append and rebuild — see its
+  // scaladoc). Below, once for all three: the per-key serving cache,
+  // the refresh state machine, the doctor's stamp and catch-up probes and
+  // the healOnRead rung. ----
 
-  private var lexIndex: Option[(String, Boolean)] = None // (table, stemmed)
-  private var lexFreshCache: Option[((Long, Long), Boolean)] = None
-  private var vecIndex: Option[(String, Int)] = None // (path, nprobe)
-  private var vecHandleCache: Option[((Long, Long), Option[graft.vector.IvfIndex.Handle])] = None
-  private var sketchTable: Option[String] = None
-  private var liveSketchCache: Option[((Long, Long), Option[Option[SketchFilter.Live]])] = None
+  private var lex: Option[ServingArtifact.LexPostings] = None
+  private var vec: Option[ServingArtifact.IvfDir] = None
+  private var sketch: Option[ServingArtifact.SketchTable] = None
 
   /** freshness-cache key: the in-process mutation epoch AND the
     * persisted cross-process watermark — a FOREIGN writer's commit (two
@@ -213,13 +203,6 @@ final class Graft(val spark: SparkSession, basePath: String,
   @volatile var lastAskVecRoute: String = "corpus"
   @volatile var lastAskLexRoute: String = "corpus"
 
-  /** everything search() scans, in index form: ALL live frames
-    * (documents AND chunks — chunk-level retrieval is part of the search
-    * surface), id + text only */
-  private def searchableFrames: DataFrame =
-    frames.latestActive.select(col("id"),
-      coalesce(col("text"), lit("")).as("text"))
-
   /** Build (or rebuild) the persisted BM25 postings table over the CURRENT
     * live frames, stamp it with the store's commit version, and attach it
     * for serving. Re-running after mutations is the maintenance loop:
@@ -236,210 +219,71 @@ final class Graft(val spark: SparkSession, basePath: String,
                     nBuckets: Int = 16,
                     partitionByTrack: Boolean = false,
                     withPositions: Boolean = false): Unit = {
-    val tracked = partitionByTrack || (spark.catalog.tableExists(table) &&
-      spark.table(table).columns.contains("track"))
-    val src = if (!tracked) searchableFrames
-      else frames.latestActive.select(col("id"),
-        coalesce(col("text"), lit("")).as("text"), col("track"))
-    graft.search.Bm25Index.write(src, "id", "text", table,
-      stemmed = stemmed, nBuckets = nBuckets,
-      trackCol = if (tracked) Some("track") else None,
-      withPositions = withPositions)
-    // stamp AFTER the build/swap: a crash in between leaves an unstamped
-    // (= stale-looking) index and serving falls back to the corpus — the
-    // safe direction
-    spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
-      s"('graft.store.version' = '$currentVersion')")
-    attachLexIndex(table, stemmed)
+    val a = new ServingArtifact.LexPostings(this, table, stemmed)
+    a.build(nBuckets, partitionByTrack, withPositions)
+    lex = Some(a)
   }
 
   /** Attach an existing postings table for serving (no build). Serving
     * uses it only while its version stamp matches the store. */
-  def attachLexIndex(table: String, stemmed: Boolean = true): Unit = {
-    lexIndex = Some((table, stemmed)); lexFreshCache = None
-  }
+  def attachLexIndex(table: String, stemmed: Boolean = true): Unit =
+    lex = Some(new ServingArtifact.LexPostings(this, table, stemmed))
 
-  def detachLexIndex(): Unit = { lexIndex = None; lexFreshCache = None }
+  def detachLexIndex(): Unit = lex = None
 
-  /** stemming of the ATTACHED serving index, if `table` is it — the
-    * doctor's rebuild consults this so a facade-served index is rebuilt
-    * through [[buildLexIndex]] (same content contract: live frames
-    * INCLUDING chunks, version restamp, serving returns to the indexed
-    * route) instead of the standalone doc-only rebuild */
-  private[api] def attachedLexStemmed(table: String): Option[Boolean] =
-    lexIndex.collect { case (t, st) if t == table => st }
+  /** the ATTACHED postings table, if `table` is it — the doctor rebuilds
+    * a facade-served index through [[buildLexIndex]] with its stemming
+    * (live frames INCLUDING chunks, restamp, serving returns to the
+    * indexed route) and may plan the incremental refresh for it */
+  private[api] def attachedLex(table: String): Option[ServingArtifact.LexPostings] =
+    lex.filter(_.table == table)
 
   /** doctor hook: maintenance rewrote an attached index artifact under
     * the same name/path (compact swap, retrain generation) — drop the
     * cached serving verdict/handle so the next query reopens the current
     * artifact instead of a deleted generation */
-  private[api] def invalidateIndexCaches(): Unit = {
-    lexFreshCache = None; vecHandleCache = None; liveSketchCache = None
-  }
-
-  /** (store-version stamp, torn-refresh pending) of a catalog-table
-    * serving artifact; None when the table is missing */
-  private def tableStamp(table: String): Option[(Option[Long], Boolean)] =
-    if (!spark.catalog.tableExists(table)) None
-    else {
-      val props = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)).properties
-      Some((props.get("graft.store.version").flatMap(_.toLongOption),
-        props.get("graft.refresh.pending").contains("1")))
-    }
-
-  private def stampCurrent(table: String): Boolean =
-    tableStamp(table).exists(_._1.contains(currentVersion))
-
-  // ---- F10 sketch pre-filter as FACADE behavior (reference: applied
-  // inside search() by default with a `no_sketch` opt-out,
-  // src/memvid/search/mod.rs:190-232 — hamming ≤ 32, keep ≥
-  // max(topK·10, 500)): a (doc_id, simhash) table maintained alongside
-  // the lex index shrinks the candidate set BEFORE the postings scorer.
-  // The shrunken set rides the indexed route's allowedIds semi-join
-  // (`search_sketch_indexed` proved the composition; this wires it into
-  // the verbs). Candidate shrink trades recall for speed exactly like
-  // the reference (BM25 re-ranks survivors; a match beyond the hamming
-  // cut is dropped) — `noSketch = true` restores exhaustive ranking.
-  //
-  // Serving is per watermark and runs on the driver: the live sketch
-  // (the table's distinct rows of live frames) is query-independent, so
-  // the first sketch-using search on a (mutation epoch, persisted
-  // watermark) key collects it once — a bounded limit(cap + 1) collect —
-  // and every later search on that key hashes the query and picks its
-  // candidates with no Spark job; the kept ids reach the ranking as a
-  // local relation. A live sketch over [[SketchFilter.LiveCap]] rows
-  // stays in Spark: the same selection as a plan over sketch ⋈ live ids
-  // ([[SketchFilter.candidates]]). Puts, refreshes and noSketch searches
-  // never fill the cache.
-  //
-  // Maintenance is APPEND-ONLY SAFE by construction: sketch rows are
-  // per-doc-version and ids are never reused, so a superseded/tombstoned
-  // version's row is INERT (its id no longer joins any live posting) and
-  // only MISSING rows (live frames past the stamp) lose recall. The
-  // refresh therefore always appends the post-stamp Active frames'
-  // sketches and restamps — no rebuild case, even across vacuum (the
-  // compacted log keeps live rows' commitSeq). ----
+  private[api] def invalidateIndexCaches(): Unit =
+    Seq(lex, vec, sketch).flatten.foreach(_.served = None)
 
   /** Build (or rebuild) the sketch table over the CURRENT live frames
     * (documents AND chunks — the same population search() ranks), stamp
     * it with the store's commit version, and attach it: search() then
-    * pre-filters by default (opt out per call with `noSketch`). */
+    * pre-filters by default (opt out per call with `noSketch`). The F10
+    * pre-filter as FACADE behavior (reference: applied inside search()
+    * by default with a `no_sketch` opt-out, src/memvid/search/mod.rs:
+    * 190-232 — hamming ≤ 32, keep ≥ max(topK·10, 500)): the shrunken
+    * candidate set rides the indexed route's allowedIds semi-join, a
+    * recall-for-speed trade exactly like the reference's. */
   def buildSketchTable(table: String): Unit = {
-    // same maintenance-lock discipline as the postings rebuild: two
-    // builders (or a builder racing a refresher's append) would otherwise
-    // interleave the overwrite with an append and strand a torn table
-    graft.search.Bm25Index.maintenanceLock(spark, table) {
-      val sk = graft.search.SketchFilter.build(searchableFrames, "id", "text")
-      sk.write.mode(SaveMode.Overwrite).saveAsTable(table)
-      spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
-        s"('graft.store.version' = '$currentVersion', " +
-        "'graft.refresh.pending' = '0')")
-    }
-    attachSketchTable(table)
+    val a = new ServingArtifact.SketchTable(this, table)
+    a.rebuild()
+    sketch = Some(a)
   }
 
   /** Attach an existing sketch table; the pre-filter only applies while
     * its version stamp matches the store (a stale sketch is missing the
     * newest docs' rows — skipping it is the lossless direction). */
-  def attachSketchTable(table: String): Unit = {
-    sketchTable = Some(table); liveSketchCache = None
-  }
+  def attachSketchTable(table: String): Unit =
+    sketch = Some(new ServingArtifact.SketchTable(this, table))
 
-  def detachSketchTable(): Unit = { sketchTable = None; liveSketchCache = None }
+  def detachSketchTable(): Unit = sketch = None
 
   /** live-sketch rows above which serving stays in Spark; a test seam */
   private[api] var liveSketchCap: Int = SketchFilter.LiveCap
 
   /** is a live sketch (or its over-cap verdict) cached? */
-  private[api] def liveSketchCached: Boolean = liveSketchCache.isDefined
-
-  /** the attached sketch's serving state on the current watermark,
-    * cached per [[storeMovedKey]]: None = stale or missing stamp (skip
-    * the filter), Some(Some(live)) = held on the driver, Some(None) =
-    * fresh but over [[liveSketchCap]] (the Spark plan serves it) */
-  private def liveSketch(table: String): Option[Option[SketchFilter.Live]] = {
-    val key = storeMovedKey
-    liveSketchCache match {
-      case Some((k, v)) if k == key => v
-      case _ =>
-        val v = if (!stampCurrent(table)) None
-          else Some(SketchFilter.Live.collect(liveSketchRows(table), liveSketchCap))
-        liveSketchCache = Some((key, v))
-        v
-    }
-  }
-
-  /** sketch rows of LIVE frames only: superseded/tombstoned versions'
-    * rows are inert for membership but would still count toward the
-    * minKeep floor and occupy hamming-nearest slots — on a churned store
-    * the effective live keep would fall below the reference's
-    * max(topK·10, 500) contract. The semi-join moves only the id column. */
-  private def liveSketchRows(table: String): DataFrame =
-    spark.table(table).join(
-      frames.latestActive.select(col("id").cast("long").as("doc_id")),
-      Seq("doc_id"), "left_semi")
+  private[api] def liveSketchCached: Boolean = sketch.exists(_.served.isDefined)
 
   /** Catch the attached sketch table up to the store: sketches of the
-    * post-stamp ACTIVE frames append, then the stamp advances (right
-    * after this handle's own put, from its held rows — see
-    * [[FrameStore.ownDelta]] — without reading the log). Always
-    * O(delta) — dead versions' rows are inert (see the section comment),
-    * so unlike the lex/vec refresh there is no delete/supersede rebuild
-    * case (only a missing/never-stamped/torn table rebuilds).
-    *
-    * Concurrent-maintainer + torn-refresh safety (same discipline as
-    * [[refreshLexIndex]]): the stamp-read → append → restamp leg runs
-    * atomically under the table's maintenance lock with an in-lock
-    * re-classification — two refreshers racing one stale stamp
-    * serialize and the loser reads the winner's restamp ("fresh")
-    * instead of double-appending the same delta (duplicate (doc_id,
-    * simhash) rows inflate [[graft.search.SketchFilter.candidates]]'
-    * floor count and silently suppress the relaxation — recall loss
-    * beyond the documented trade). A `graft.refresh.pending` marker
-    * lands before the append and clears in the same ALTER as the
-    * restamp; a crash in between leaves it set and the next refresh
-    * rebuilds instead of re-appending.
+    * post-stamp ACTIVE frames append, then the stamp advances. Always
+    * O(delta): dead versions' rows are inert, so unlike the lex/vec
+    * refresh there is no delete/supersede rebuild case (only a
+    * missing/never-stamped/torn table rebuilds).
     * @return "fresh" | "appended" | "rebuilt" */
-  def refreshSketchTable(): String = sketchTable match {
+  def refreshSketchTable(): String = sketch match {
     case None => throw new IllegalStateException(
       "refreshSketchTable: no attached sketch table (attachSketchTable first)")
-    case Some(table) =>
-      liveSketchCache = None
-      def snapshot(): (Option[Long], Boolean) =
-        tableStamp(table).getOrElse((None, false))
-      val cur0 = currentVersion
-      val (stamp0, pending0) = snapshot()
-      // lock-free only on a STABLE observation (see refreshLexIndex: a
-      // pending marker seen from outside the lock can be a peer's healthy
-      // in-flight append — it must re-classify under the lock)
-      if (!pending0 && stamp0.contains(cur0)) "fresh"
-      else {
-        val outcome = graft.search.Bm25Index.maintenanceLock(spark, table) {
-          val cur = currentVersion
-          val (stamp, pending) = snapshot()
-          if (!pending && stamp.contains(cur)) "fresh"
-          else if (stamp.isEmpty || pending) "needs_rebuild"
-          else {
-            val delta = frames.ownDelta(stamp.get, cur).map(_.toDF())
-              .getOrElse(frames.log.filter(
-                  col("commitSeq") > stamp.get && col("commitSeq") <= cur)
-                .filter(col("status") === graft.model.Frame.Active).toDF())
-              .select(col("id"), coalesce(col("text"), lit("")).as("text"))
-            spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
-              "('graft.refresh.pending' = '1')")
-            graft.search.SketchFilter.build(delta, "id", "text")
-              .write.mode(SaveMode.Append).saveAsTable(table)
-            spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
-              s"('graft.store.version' = '$cur', 'graft.refresh.pending' = '0')")
-            "appended"
-          }
-        }
-        if (outcome == "needs_rebuild") { // missing/never-stamped/torn
-          buildSketchTable(table)
-          "rebuilt"
-        } else outcome
-      }
+    case Some(a) => refresh(a, a.rebuild())
   }
 
   /** did the LAST search() apply the sketch pre-filter? — the gate/spec
@@ -448,359 +292,46 @@ final class Graft(val spark: SparkSession, basePath: String,
 
   /** the facade-ATTACHED sketch table, if any — the doctor's sketch
     * probe consults this (a standalone table has no serving contract) */
-  private[api] def attachedSketchTable: Option[String] = sketchTable
-
-  /** is the attached sketch table's serving stamp behind the store, its
-    * refresh torn, or the table missing? — the doctor's `sketch_stale`
-    * probe. A stale sketch silently degrades search() to no-prefilter
-    * (correct but slower at scale — the F10 candidate shrink stops
-    * applying), so the doctor plans the always-append refresh. */
-  private[api] def sketchStampStale(table: String): Boolean =
-    !tableStamp(table).exists { case (stamp, pending) =>
-      stamp.contains(currentVersion) && !pending }
-
-  private def lexIndexFresh(table: String): Boolean = {
-    val key = storeMovedKey
-    lexFreshCache match {
-      case Some((k, v)) if k == key => v
-      case _ =>
-        val fresh = stampCurrent(table)
-        lexFreshCache = Some((key, fresh))
-        fresh
-    }
-  }
+  private[api] def attachedSketch: Option[ServingArtifact.SketchTable] = sketch
 
   /** Build (or rebuild) the persisted IVF index over the live documents'
     * embeddings, stamp, and attach. Centroids train with Lloyd iterations
     * over the current embedding table (deterministic seed rows). */
   def buildVecIndex(path: String, k: Int = 4, iters: Int = 2,
                     nprobe: Int = 4): Unit = {
-    // pin: the embedder UDF runs once, not once per Lloyd iteration
-    val emb = embeddingsTable.localCheckpoint()
-    // deterministic seeds: the k lowest-id live vectors
-    val seeds = emb.orderBy(col("id")).limit(k).collect().zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Float](1).map(_.toDouble).toArray) }
-      .toSeq
-    require(seeds.nonEmpty, "buildVecIndex: store has no live documents")
-    val (cents, _) =
-      graft.vector.VectorSearch.kmeansLloyd(emb, "vector", seeds, iters)
-    graft.vector.IvfIndex.write(emb, "id", "vector", path,
-      cents.map { case (cid, c) => (cid, c.map(_.toFloat)) })
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$path/_GRAFT_STORE_VERSION"), true)
-    out.write(currentVersion.toString.getBytes("UTF-8")); out.close()
-    attachVecIndex(path, nprobe)
+    val a = new ServingArtifact.IvfDir(this, path, nprobe, activeEmbedder)
+    a.build(k, iters)
+    vec = Some(a)
   }
 
   /** Attach an existing IVF index for ask()'s vector rung; served only
     * while its version stamp matches the store. @param nprobe clusters
     * probed per query (pass the index's cluster count for exact parity
     * with brute force) */
-  def attachVecIndex(path: String, nprobe: Int = 4): Unit = {
-    vecIndex = Some((path, nprobe)); vecHandleCache = None
-  }
+  def attachVecIndex(path: String, nprobe: Int = 4): Unit =
+    vec = Some(new ServingArtifact.IvfDir(this, path, nprobe, activeEmbedder))
 
-  def detachVecIndex(): Unit = { vecIndex = None; vecHandleCache = None }
+  def detachVecIndex(): Unit = vec = None
 
-  /** fresh handle or None, cached per (mutation epoch, persisted
-    * watermark) — see [[storeMovedKey]] */
-  private def vecServingHandle(path: String): Option[graft.vector.IvfIndex.Handle] = {
-    val key = storeMovedKey
-    vecHandleCache match {
-      case Some((k, h)) if k == key => h
-      case _ =>
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val stampPath = new org.apache.hadoop.fs.Path(s"$path/_GRAFT_STORE_VERSION")
-        val fresh = graft.vector.IvfIndex.exists(spark, path) &&
-          fs.exists(stampPath) && {
-            val in = fs.open(stampPath)
-            val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-            finally in.close()
-            s == currentVersion.toString
-          }
-        val h = if (fresh) Some(graft.vector.IvfIndex.read(spark, path)) else None
-        vecHandleCache = Some((key, h))
-        h
-    }
-  }
-
-  // ---- incremental serving catch-up (reference: instant-index updates
-  // the engine WITHIN the commit, src/memvid/search/builders.rs:12-44 —
-  // a mutation keeps the serving index current instead of exiling
-  // queries to a corpus scan until a full rebuild). The Spark-native
-  // form is explicit maintenance: refresh*Index() computes the frames
-  // past the index's version stamp and APPENDS them through the gated
-  // incremental primitives ([[graft.search.Bm25Index.append]] /
-  // [[graft.vector.IvfIndex.append]]), then restamps — O(|delta|) work.
-  // A delta that breaks the append contract (tombstones or superseding
-  // versions invalidate already-indexed postings/vectors) falls back to
-  // the full rebuild EXPLICITLY. At 100 TB the difference is the
-  // corpus/delta ratio: one put() no longer costs a corpus-sized
-  // rebuild to restore indexed serving.
-  //
-  // Hit vs miss: when the delta is exactly this handle's last put — the
-  // stamp is the watermark that put read, the store is at the watermark
-  // it minted, nothing else moved ([[FrameStore.ownDelta]]) — the delta
-  // is append-only by construction and its rows are on the driver: no
-  // classification scan, no log re-read, and the vec leg embeds on the
-  // driver. Anything else (a foreign commit, several puts before one
-  // refresh, an update/delete, a vacuum) misses and classifies from the
-  // log as below; the marker, lock and restamp order are the same on
-  // both paths.
-  //
-  // Torn-refresh safety: a 'refresh pending' marker lands BEFORE the
-  // append and clears only after (lex: in the same ALTER as; vec:
-  // after) the restamp. A crash between append and restamp leaves the
-  // marker set; the next refresh sees it and takes the rebuild path
-  // instead of re-appending the same delta (which would double-count
-  // postings / duplicate candidate ids). Concurrent-maintainer safety:
-  // the whole stamp-read → append → restamp leg runs ATOMICALLY under
-  // the index artifact's maintenance lock with an in-lock
-  // re-classification, so two refreshers racing one stale stamp
-  // serialize and the loser returns "fresh" — across threads AND
-  // processes (the lock is the cross-process lockfile).
+  /** the ATTACHED vector index, if `path` is it — staleness healing only
+    * applies to an index the facade actually serves from (a standalone
+    * artifact has no serving stamp contract) */
+  private[api] def attachedVec(path: String): Option[ServingArtifact.IvfDir] =
+    vec.filter(_.path == path)
 
   /** Catch the attached BM25 serving index up to the store's current
-    * version. @return "fresh" (stamp already current — nothing to do),
+    * version (reference instant-index, src/memvid/search/builders.rs:
+    * 12-44). @return "fresh" (stamp already current — nothing to do),
     * "appended" (post-stamp delta appended into the bucketed postings +
     * restamped; serving returns to the indexed route at delta cost), or
     * "rebuilt" (the delta contained deletes/supersedes — beyond the
     * append contract — or a prior refresh was torn, so the index was
-    * fully rebuilt via [[buildLexIndex]]). */
-  def refreshLexIndex(): String = lexIndex match {
+    * fully rebuilt in its own layout). */
+  def refreshLexIndex(): String = lex match {
     case None => throw new IllegalStateException(
       "refreshLexIndex: no attached lexical index (attachLexIndex first)")
-    case Some((table, stemmed)) =>
-      // (exists, stamp, torn-refresh pending, bucket count)
-      def snapshot(): (Boolean, Option[Long], Boolean, Int) = {
-        val exists = spark.catalog.tableExists(table)
-        val meta = if (exists) Some(spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(table))) else None
-        (exists,
-         meta.flatMap(_.properties.get("graft.store.version")).flatMap(_.toLongOption),
-         meta.exists(_.properties.get("graft.refresh.pending").contains("1")),
-         meta.flatMap(_.bucketSpec.map(_.numBuckets)).getOrElse(16))
-      }
-      def rebuild(nBuckets: Int): String = {
-        buildLexIndex(table, stemmed, nBuckets)
-        spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
-          "('graft.refresh.pending' = '0')")
-        "rebuilt"
-      }
-      val cur0 = currentVersion
-      val (exists0, stamp0, pending0, nb0) = snapshot()
-      // Unlocked fast paths may only act on STABLE observations. A
-      // pending marker or a missing/unreadable stamp seen from OUTSIDE
-      // the lock can be another process's healthy in-flight append (the
-      // marker is set and cleared inside its locked leg) — classifying
-      // it as torn here raced a REBUILD against that append (found by
-      // SoakMultiWriter: spurious 'rebuilt' outcomes in an append-only
-      // workload). Only a current stamp ("fresh") or a present-stamp
-      // delta with deletes/supersedes ("rebuild" — a delta never
-      // un-breaks) are lock-free decisions; everything else
-      // re-classifies under the lock, where pending genuinely means
-      // torn.
-      if (!pending0 && stamp0.contains(cur0)) "fresh"
-      else if (exists0 && !pending0 && stamp0.isDefined &&
-               catchUp(stamp0.get, cur0) == Graft.Rebuild) rebuild(nb0)
-      else {
-        // the append leg is ATOMIC under the table's maintenance lock,
-        // RE-classified inside it: two maintainers racing one stale
-        // stamp serialize, and the loser re-reads the winner's restamp
-        // ("fresh") instead of double-appending the same delta
-        val outcome = graft.search.Bm25Index.maintenanceLock(spark, table) {
-          val cur = currentVersion
-          val (exists, stamp, pending, nb) = snapshot()
-          lazy val how = stamp.filter(_ => exists && !pending).map(catchUp(_, cur))
-          if (!pending && stamp.contains(cur)) "fresh"
-          else if (how.forall(_ == Graft.Rebuild)) "needs_rebuild"
-          else {
-            // bound the delta by BOTH stamps so the restamp covers
-            // exactly the appended rows even if a foreign writer
-            // commits mid-refresh
-            val delta = deltaFrames(how.get, stamp.get, cur)
-            spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
-              "('graft.refresh.pending' = '1')")
-            // a track-partitioned table's delta must land in the right
-            // partition directories — carry the frames' track through
-            val tracked = spark.table(table).columns.contains("track")
-            graft.search.Bm25Index.appendUnlocked(
-              delta.select(col("id") +:
-                coalesce(col("text"), lit("")).as("text") +:
-                (if (tracked) Seq(col("track")) else Nil): _*),
-              "id", "text", table, stemmed, nb,
-              trackCol = if (tracked) Some("track") else None)
-            // restamp + clear in ONE catalog update: either both land
-            // (refresh complete) or neither (marker still set → rebuild)
-            spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
-              s"('graft.store.version' = '$cur', 'graft.refresh.pending' = '0')")
-            lexFreshCache = None
-            "appended"
-          }
-        }
-        if (outcome == "needs_rebuild") rebuild(nb0) else outcome
-      }
+    case Some(a) => refresh(a, a.rebuild())
   }
-
-  /** How an artifact stamped at `stamp` catches up to `cur`. When
-    * `(stamp, cur]` is exactly this handle's last put, from its rows held
-    * on the driver ([[FrameStore.ownDelta]]: append-only by construction,
-    * no scan). Otherwise one limit(1) scan of the log's delta decides:
-    * a tombstone or a superseding version invalidates indexed rows, so
-    * rebuild. So does a vacuum AFTER the stamp: it purged the very rows
-    * this scan reads (a deleted doc's tombstone vanishes, the delta looks
-    * append-only, and an append would restamp an index still carrying
-    * the ghost postings). `lastVacuumSeq == stamp` is safe: the artifact
-    * was current at the vacuum and compaction is value-neutral for the
-    * live view. */
-  private def catchUp(stamp: Long, cur: Long): Graft.CatchUp =
-    frames.ownDelta(stamp, cur) match {
-      case Some(rows) => Graft.OwnRows(rows)
-      case None if frames.lastVacuumSeq > stamp ||
-          frames.log.filter(col("commitSeq") > stamp && col("commitSeq") <= cur)
-            .filter(col("status") =!= graft.model.Frame.Active ||
-              col("supersedes").isNotNull)
-            .limit(1).count() > 0 => Graft.Rebuild
-      case None => Graft.LogRows
-    }
-
-  /** the frames an append-only catch-up adds: the held rows as a local
-    * relation, or the log's `(stamp, cur]` rows */
-  private def deltaFrames(how: Graft.CatchUp, stamp: Long, cur: Long): DataFrame =
-    how match {
-      case Graft.OwnRows(rows) => rows.toDF()
-      case _ => frames.log.filter(
-        col("commitSeq") > stamp && col("commitSeq") <= cur).toDF()
-    }
-
-  /** Can the stamped postings table catch up by APPEND? — the doctor's
-    * plan-time probe, the same classification [[refreshLexIndex]] runs:
-    * true = the post-stamp delta is append-only; false = a rebuild is
-    * needed (missing/unparseable stamp, torn-refresh marker, or
-    * deletes/supersedes in the delta). One limit(1) count over the
-    * commitSeq-filtered log. */
-  private[api] def lexDeltaAppendable(table: String): Boolean =
-    tableStamp(table) match {
-      case Some((Some(stamp), false)) => catchUp(stamp, currentVersion) != Graft.Rebuild
-      case _ => false // missing table, unparseable stamp or torn refresh
-    }
-
-  /** the lex freshness check, with the [[healOnRead]] rung in front: a
-    * stale stamp whose delta is append-only heals via the O(delta)
-    * refresh and serves indexed; anything else (deletes, supersedes,
-    * vacuumed-past deltas, torn markers) reports stale and the caller
-    * falls back to the corpus — a read never runs a rebuild. (A foreign
-    * writer racing between the probe and the refresh could still push
-    * the refresh to its rebuild path; the refresh lock re-classifies, so
-    * the result is correct either way — the probe is the cost bound for
-    * the single-writer case, not a semantic gate.) */
-  /** is `anchor`'s maintenance lock currently unheld? — the read-path
-    * heal's cheap skip probe: if a peer is mid-maintenance, the read
-    * serves corpus NOW instead of queueing up to the full acquire
-    * timeout behind it (the peer's restamp serves the next read
-    * indexed anyway). One FS existence check; non-atomic by design —
-    * the refresh keeps its own lock for correctness, and the
-    * StoreLockedException catch below backstops the race window. */
-  private def maintenanceIdle(anchor: String): Boolean =
-    graft.store.StoreLock.currentOwner(spark, anchor).isEmpty
-
-  private def lexLockAnchor(table: String): String =
-    spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/") + "/" + table
-
-  private def lexFreshOrHealed(table: String): Boolean =
-    lexIndexFresh(table) ||
-      (healOnRead && maintenanceIdle(lexLockAnchor(table)) &&
-        lexDeltaAppendable(table) && {
-        // the heal is best-effort INSIDE a read: under maintenance-lock
-        // contention (N writers racing one artifact) the refresh can
-        // time out on acquire — a READ must degrade to the corpus path,
-        // never die for maintenance it didn't need (the 5-writer soak
-        // killed a reader exactly here before this catch)
-        try { refreshLexIndex(): Unit } catch {
-          case _: graft.store.StoreLock.StoreLockedException => ()
-        }
-        lexIndexFresh(table)
-      })
-
-  private def vecStampPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_GRAFT_STORE_VERSION")
-  private def vecPendingPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_GRAFT_REFRESH_PENDING")
-  private def hfs(path: String) = new org.apache.hadoop.fs.Path(path)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Outer None = stamp file ABSENT (the index never participated in
-    * serving — not stale, nothing to heal). Inner None = stamp file
-    * PRESENT but unreadable/unparseable — a torn or corrupt stamp, which
-    * must read as STALE (serving already falls back to the corpus on the
-    * string compare; without this distinction the doctor would never
-    * plan the refresh that re-stamps it and the index stays silently
-    * unserved until a manual rebuild). */
-  private def readVecStampRaw(path: String): Option[Option[Long]] = {
-    val fs = hfs(path)
-    try {
-      if (!fs.exists(vecStampPath(path))) None
-      else Some {
-        val in = fs.open(vecStampPath(path))
-        val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-        s.toLongOption
-      }
-    } catch {
-      // exists() succeeded but the read failed → present-but-unreadable;
-      // if even exists() throws, surface as absent (nothing provable)
-      case scala.util.control.NonFatal(_) =>
-        try { if (fs.exists(vecStampPath(path))) Some(None) else None }
-        catch { case scala.util.control.NonFatal(_) => None }
-    }
-  }
-
-  private def readVecStamp(path: String): Option[Long] =
-    readVecStampRaw(path).flatten
-
-  /** nprobe of the ATTACHED vector index, if `path` is it — the doctor
-    * consults this so staleness healing only applies to an index the
-    * facade actually serves from (a standalone artifact has no serving
-    * stamp contract) */
-  private[api] def attachedVec(path: String): Option[Int] =
-    vecIndex.collect { case (p, np) if p == path => np }
-
-  /** can the stamped IVF index catch up by APPEND? — the vector twin of
-    * [[lexDeltaAppendable]] (same classification [[refreshVecIndex]]
-    * runs): false on a missing/unparseable stamp, a torn-refresh marker,
-    * deletes/supersedes in the delta, or a vacuum past the stamp. */
-  private[api] def vecDeltaAppendable(path: String): Boolean =
-    graft.vector.IvfIndex.exists(spark, path) && {
-      val stamp = readVecStamp(path)
-      !hfs(path).exists(vecPendingPath(path)) &&
-        stamp.exists(catchUp(_, currentVersion) != Graft.Rebuild)
-    }
-
-  /** [[vecServingHandle]] with the [[healOnRead]] rung — see
-    * [[lexFreshOrHealed]] for the contract */
-  private def vecHandleOrHealed(path: String): Option[graft.vector.IvfIndex.Handle] =
-    vecServingHandle(path).orElse {
-      if (healOnRead && maintenanceIdle(path) && vecDeltaAppendable(path)) {
-        // best-effort inside a read — see lexFreshOrHealed: a contended
-        // maintenance lock must degrade the read to corpus, not kill it
-        try { refreshVecIndex(): Unit } catch {
-          case _: graft.store.StoreLock.StoreLockedException => ()
-        }
-        vecServingHandle(path)
-      } else None
-    }
-
-  /** is the serving stamp of an attached vector index behind the store
-    * (or a refresh torn)? — the doctor's vec_index_stale probe. An
-    * UNSTAMPED index is not "stale": it never participated in serving.
-    * A stamp that is present but unparseable IS stale (see
-    * [[readVecStampRaw]] — the doctor must heal it). */
-  private[api] def vecStampStale(path: String): Boolean =
-    readVecStampRaw(path).exists(_.forall(_ != currentVersion)) ||
-      hfs(path).exists(vecPendingPath(path))
 
   /** Catch the attached IVF serving index up to the store: new document
     * frames past the stamp are embedded and appended as a committed
@@ -808,81 +339,117 @@ final class Graft(val spark: SparkSession, basePath: String,
     * retraining stays the doctor's job), then the stamp advances and
     * ask()'s vector rung routes back through the index. Same
     * return/fallback contract as [[refreshLexIndex]]; the rebuild path
-    * retrains via [[buildVecIndex]] with the index's own cluster count.
+    * retrains with the index's own cluster count.
     * @param rebuildIters Lloyd iterations if a full rebuild is forced */
-  def refreshVecIndex(rebuildIters: Int = 2): String = vecIndex match {
+  def refreshVecIndex(rebuildIters: Int = 2): String = vec match {
     case None => throw new IllegalStateException(
       "refreshVecIndex: no attached vector index (attachVecIndex first)")
-    case Some((path, nprobe)) =>
-      val fs = hfs(path)
-      // (index exists, stamp, torn-refresh marker)
-      def snapshot(): (Boolean, Option[Long], Boolean) =
-        (graft.vector.IvfIndex.exists(spark, path), readVecStamp(path),
-         fs.exists(vecPendingPath(path)))
-      def rebuild(exists: Boolean): String = {
-        val k = if (exists)
-          graft.vector.IvfIndex.read(spark, path).centroids.size else 4
-        buildVecIndex(path, k = math.max(k, 1), iters = rebuildIters,
-          nprobe = nprobe)
-        fs.delete(vecPendingPath(path), false)
-        "rebuilt"
-      }
+    case Some(a) => refresh(a, a.rebuildWith(rebuildIters))
+  }
+
+  /** The refresh state machine of every artifact. Lock-free, only
+    * STABLE observations decide: a current stamp is "fresh", and a
+    * present stamp whose delta breaks the append contract rebuilds (a
+    * delta never un-breaks). A marker or a missing/unreadable stamp seen
+    * here can be a peer's healthy in-flight append (SoakMultiWriter found
+    * spurious rebuilds in an append-only workload when this classified
+    * it as torn), so it re-classifies under the lock, where a marker
+    * genuinely means torn: fresh, rebuild, or mark → append → restamp.
+    * The delta is bounded by BOTH stamps, so the restamp covers exactly
+    * the appended rows even if a foreign writer commits mid-refresh. The
+    * rebuild runs outside the lock (the builds take it themselves). */
+  private def refresh(a: ServingArtifact[_], rebuild: => Unit): String =
+    try {
       val cur0 = currentVersion
-      val (exists0, stamp0, pending0) = snapshot()
-      // unlocked fast paths act on STABLE observations only — see
-      // refreshLexIndex (pending/unreadable-stamp must classify under
-      // the lock, or a peer's in-flight append reads as torn)
-      if (exists0 && !pending0 && stamp0.contains(cur0)) "fresh"
-      else if (exists0 && !pending0 && stamp0.isDefined &&
-               catchUp(stamp0.get, cur0) == Graft.Rebuild) rebuild(exists0)
-      else {
-        // ATOMIC append leg (see refreshLexIndex): re-classify under the
-        // index's maintenance lock so racing maintainers serialize
-        val outcome = graft.vector.IvfIndex.maintenanceLock(spark, path) {
+      val s0 = a.stamp()
+      val outcome =
+        if (s0.fresh(cur0)) "fresh"
+        else if (a.rebuildsOnDelta &&
+                 s0.stable.exists(catchUp(a, _, cur0) == ServingArtifact.Rebuild)) "rebuild"
+        else a.withLock {
           val cur = currentVersion
-          val (exists, stamp, pending) = snapshot()
-          lazy val how = stamp.filter(_ => exists && !pending).map(catchUp(_, cur))
-          if (exists && !pending && stamp.contains(cur)) "fresh"
-          else if (how.forall(_ == Graft.Rebuild)) "needs_rebuild"
+          val s = a.stamp()
+          lazy val how = s.stable.map(catchUp(a, _, cur))
+          if (s.fresh(cur)) "fresh"
+          else if (how.forall(_ == ServingArtifact.Rebuild)) "rebuild"
           else {
-            val e = activeEmbedder
-            // the vector index covers DOCUMENT frames only (same
-            // population as embeddingsTable); delta is driver-small
-            val deltaVecs = how.get match {
-              case Graft.OwnRows(rows) => // the texts are on the driver
-                val docs = rows.filter(_.role == "document")
-                Option.when(docs.nonEmpty)(docs.map(r => (r.id, e.embed(r.text)))
-                  .toDF("id", "vector"))
-              case logRows =>
-                val embedUdf = udf((t: String) => e.embed(if (t == null) "" else t))
-                Some(deltaFrames(logRows, stamp.get, cur)
-                  .filter(col("role") === "document")
-                  .select(col("id"),
-                    embedUdf(coalesce(col("text"), lit(""))).as("vector"))
-                  .localCheckpoint()).filterNot(_.isEmpty)
-            }
-            if (deltaVecs.isEmpty) {
-              val out = fs.create(vecStampPath(path), true)
-              out.write(cur.toString.getBytes("UTF-8")); out.close()
-            } else {
-              fs.create(vecPendingPath(path), true).close()
-              graft.vector.IvfIndex.appendUnlocked(spark, path, deltaVecs.get,
-                "id", "vector"): Unit
-              // restamp FIRST, then clear the marker: a crash in between
-              // costs one spurious rebuild, never a double-append
-              val out = fs.create(vecStampPath(path), true)
-              out.write(cur.toString.getBytes("UTF-8")); out.close()
-              fs.delete(vecPendingPath(path), false)
-            }
-            vecHandleCache = None
+            a.delta(how.get).foreach { rows => a.markPending(); a.appendDelta(rows) }
+            a.restamp(cur)
             "appended"
           }
         }
-        if (outcome == "needs_rebuild")
-          rebuild(graft.vector.IvfIndex.exists(spark, path))
-        else outcome
-      }
+      if (outcome == "rebuild") { rebuild; "rebuilt" } else outcome
+    } finally a.served = None
+
+  /** How an artifact stamped at `stamp` catches up to `cur`. When
+    * `(stamp, cur]` is exactly this handle's last put, from its rows held
+    * on the driver ([[FrameStore.ownDelta]]: append-only by construction,
+    * no scan). Otherwise, for an artifact that rebuilds on a broken
+    * delta, one limit(1) scan of the log's delta decides: a tombstone or
+    * a superseding version invalidates indexed rows, so rebuild. So does
+    * a vacuum AFTER the stamp: it purged the very rows this scan reads (a
+    * deleted doc's tombstone vanishes, the delta looks append-only, and an
+    * append would restamp an index still carrying the ghost postings).
+    * `lastVacuumSeq == stamp` is safe: the artifact was current at the
+    * vacuum and compaction is value-neutral for the live view. */
+  private def catchUp(a: ServingArtifact[_], stamp: Long, cur: Long): ServingArtifact.CatchUp = {
+    lazy val log = frames.log.filter(col("commitSeq") > stamp && col("commitSeq") <= cur)
+    frames.ownDelta(stamp, cur) match {
+      case Some(rows) => ServingArtifact.OwnRows(rows)
+      case None if a.rebuildsOnDelta && (frames.lastVacuumSeq > stamp ||
+          log.filter(col("status") =!= graft.model.Frame.Active ||
+            col("supersedes").isNotNull).limit(1).count() > 0) => ServingArtifact.Rebuild
+      case None => ServingArtifact.LogRows(
+        log.filter(col("status") === graft.model.Frame.Active).toDF())
+    }
   }
+
+  /** the artifact's serving value on the current store key, cached per
+    * [[storeMovedKey]]: None while its stamp is behind the store */
+  private def serving[S](a: ServingArtifact[S]): Option[S] = {
+    val key = storeMovedKey
+    a.served match {
+      case Some((k, v)) if k == key => v
+      case _ =>
+        val v = Option.when(a.stamp().fresh(currentVersion))(a.open())
+        a.served = Some((key, v))
+        v
+    }
+  }
+
+  /** [[serving]] with the [[healOnRead]] rung in front: a stale stamp
+    * whose delta is append-only heals via the O(delta) refresh and
+    * serves indexed; anything else (deletes, supersedes, vacuumed-past
+    * deltas, torn markers, a peer mid-maintenance) serves the corpus — a
+    * read never runs a rebuild. (A foreign writer racing between the
+    * probe and the refresh could still push the refresh to its rebuild
+    * path; the lock re-classifies, so the result is correct either way.)
+    * The heal is best-effort INSIDE a read: under maintenance-lock
+    * contention the refresh can time out on acquire, and the read must
+    * degrade to the corpus, never die (the 5-writer soak killed a reader
+    * here before this catch). */
+  private def healed[S](a: ServingArtifact[S]): Option[S] =
+    serving(a).orElse {
+      if (healOnRead && a.idle && appendable(a)) {
+        try { refresh(a, a.rebuild()): Unit } catch {
+          case _: graft.store.StoreLock.StoreLockedException => ()
+        }
+        serving(a)
+      } else None
+    }
+
+  /** Can the artifact catch up by APPEND? — the doctor's plan-time probe
+    * and the heal's gate, the classification refresh runs: false on a
+    * missing artifact, an unparseable stamp, a torn-refresh marker, or a
+    * delta with deletes/supersedes or past a vacuum. */
+  private[api] def appendable(a: ServingArtifact[_]): Boolean =
+    a.stamp().stable.exists(catchUp(a, _, currentVersion) != ServingArtifact.Rebuild)
+
+  /** the doctor's `vec_index_stale` / `sketch_stale` probe: is the
+    * attached artifact's stamp behind the store, its refresh torn, or
+    * (sketch) the table missing? See [[ServingArtifact.stale]]. */
+  private[api] def stampStale(a: ServingArtifact[_]): Boolean =
+    a.stale(a.stamp(), currentVersion)
 
   // ---- query ----
   /** @param acl optional per-caller ACL check, applied post-ranking over
@@ -909,11 +476,11 @@ final class Graft(val spark: SparkSession, basePath: String,
     // the postings table while the stamp is fresh, recomputed from the
     // corpus (same scores) while it is stale; without one, the fallback
     // occurrence scorer
-    val ranked = lexIndex match {
-      case Some((t, stemmed)) =>
+    val ranked = lex match {
+      case Some(l) =>
         val opts = Search.Options(topK = topK,
-          engine = Search.BM25Engine, stemmed = stemmed)
-        if (lexFreshOrHealed(t)) {
+          engine = Search.BM25Engine, stemmed = l.stemmed)
+        if (healed(l).isDefined) {
           lastSearchRoute = "indexed"
           // the sketch pre-filter rides the indexed route's allowed-id
           // semi-join; it applies only with TEXT terms to rank (the
@@ -922,20 +489,20 @@ final class Graft(val spark: SparkSession, basePath: String,
           // store (stale sketch = missing newest docs — skipping is the
           // lossless direction)
           val allowed = for {
-            sk <- sketchTable if !noSketch
+            sk <- sketch if !noSketch
             if graft.search.QExpr
               .words(graft.search.QueryParser.parse(query)).exists(_.nonEmpty)
             qh <- SketchFilter.queryHash(query)
-            live <- liveSketch(sk)
+            live <- serving(sk)
           } yield {
             lastSketchApplied = true
             live match {
               case Some(l) => l.candidates(qh, topK).toSeq.toDF("doc_id")
-              case None => SketchFilter.candidates(liveSketchRows(sk), qh, topK)
+              case None => SketchFilter.candidates(sk.liveRows, qh, topK)
             }
           }
           Search.searchIndexed(frames.latestActive, "id", frameCols, query,
-            t, opts, allowedIds = allowed)
+            l.table, opts, allowedIds = allowed)
         } else {
           lastSearchRoute = "corpus"
           Search.search(frames.latestActive, "id", frameCols, query, opts)
@@ -1005,10 +572,10 @@ final class Graft(val spark: SparkSession, basePath: String,
     // come from the nprobe index search (reference ≥1000-vector ANN
     // switch, src/vec.rs:23) and the semantic re-rank reads the same
     // persisted vectors; stale or absent → the pre-attach ladder
-    val vecServing = vecIndex.flatMap { case (p, nprobe) =>
-      vecHandleOrHealed(p).map { h =>
+    val vecServing = vec.flatMap { v =>
+      healed(v).map { h =>
         (h.assigned.select(col("id"), col("vector")),
-         (qv: Array[Float], k: Int) => h.search("id", "vector", qv, k, nprobe))
+         (qv: Array[Float], k: Int) => h.search("id", "vector", qv, k, v.nprobe))
       }
     }
     lastAskVecRoute = if (vecServing.isDefined) "indexed" else "corpus"
@@ -1018,14 +585,14 @@ final class Graft(val spark: SparkSession, basePath: String,
     // postings while the stamp is fresh, corpus-BM25 while stale — the
     // scores are bit-equal either way, only WHERE the work happens moves
     val lexServing: Option[(String, Int) => DataFrame] =
-      lexIndex.map { case (t, stemmed) =>
+      lex.map { l =>
         (q: String, k: Int) => {
           val opts = Search.Options(topK = k, withSnippets = false,
-            engine = Search.BM25Engine, stemmed = stemmed)
-          if (lexFreshOrHealed(t)) {
+            engine = Search.BM25Engine, stemmed = l.stemmed)
+          if (healed(l).isDefined) {
             lastAskLexRoute = "indexed"
             Search.searchIndexed(frames.latestActive, "id", frameCols, q,
-              t, opts)
+              l.table, opts)
           } else {
             lastAskLexRoute = "corpus"
             Search.search(frames.latestActive, "id", frameCols, q, opts)
@@ -1450,16 +1017,6 @@ final class Graft(val spark: SparkSession, basePath: String,
 }
 
 object Graft {
-  /** how a serving artifact catches up to the store (see `catchUp`) */
-  private sealed trait CatchUp
-  /** the delta is this handle's last put: its rows, held on the driver */
-  private final case class OwnRows(rows: Seq[graft.store.FrameStore.ServingRow])
-    extends CatchUp
-  /** append-only: read the delta from the log */
-  private case object LogRows extends CatchUp
-  /** the append contract is broken: rebuild */
-  private case object Rebuild extends CatchUp
-
   /** the cards table's on-disk schema (every writer emits this shape) */
   private[api] val cardsSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._

@@ -325,6 +325,17 @@ object Bm25Index {
       .repartition(nb, col("doc_id"))
     graft.ops.Bucketing.writeBucketed(merged, tmpName, nb, Seq("doc_id"),
       if (tracked) Seq("track") else Nil)
+    // the swap installs a NEW catalog table: carry the live table's
+    // `graft.` properties (serving stamp, torn-refresh marker) onto the
+    // staged one under this lock, so compaction — value-neutral — never
+    // drops a marker or restamps behind a concurrent refresh, and a
+    // recovered torn swap carries them too
+    val carried = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(tableName))
+      .properties.filter(_._1.startsWith("graft."))
+    if (carried.nonEmpty)
+      spark.sql(s"ALTER TABLE `$tmpName` SET TBLPROPERTIES (" +
+        carried.map { case (k, v) => s"'$k' = '$v'" }.mkString(", ") + ")")
     if (!tracked) {
       spark.sql(s"ALTER TABLE `$tableName` RENAME TO `$oldName`")
       spark.sql(s"ALTER TABLE `$tmpName` RENAME TO `$tableName`")

@@ -327,16 +327,9 @@ object StreamingIngest {
         spark.catalog.refreshTable(tableName)
         compactFileBudget.foreach { budget =>
           if (graft.search.Bm25Index.dataFileCount(spark, tableName) > budget) {
-            // compaction is value-neutral but the swap installs a NEW
-            // catalog table, dropping properties — re-stamp any serving
-            // version so a facade-attached table stays indexed-served
-            // (the doctor's compact_lex_index discipline)
-            val stamp = spark.sessionState.catalog.getTableMetadata(
-              org.apache.spark.sql.catalyst.TableIdentifier(tableName))
-              .properties.get("graft.store.version")
+            // value-neutral; the swap carries a facade-attached table's
+            // serving stamp, so it stays indexed-served
             graft.search.Bm25Index.compact(spark, tableName, nBuckets)
-            stamp.foreach(v => spark.sql(s"ALTER TABLE `$tableName` " +
-              s"SET TBLPROPERTIES ('graft.store.version' = '$v')"))
             spark.catalog.refreshTable(tableName)
           }
         }

@@ -146,7 +146,7 @@ class FacadeIndexSpec extends SparkSpec {
     g.buildLexIndex("facade_lex_refresh_chunk_spec", stemmed = false)
     // > 1200 chars forces chunking: the delta carries the parent doc AND
     // its chunk frames, all Active — the append path must index both
-    // (searchableFrames includes chunks on the build side)
+    // (the build indexes chunks too)
     val long = ("sparkly filler sentence about nothing in particular. " * 25) +
       "the zanzibar clause hides in chunk two of this document."
     assert(long.length > 1200)
@@ -204,23 +204,31 @@ class FacadeIndexSpec extends SparkSpec {
 
   test("racing refreshers serialize under the artifact lock: exactly one appends") {
     val g = freshStore()
-    g.buildLexIndex("facade_lex_race_spec", stemmed = false)
+    val dir = tmpStore()
+    val (lexT, skT) = ("facade_lex_race_spec", "facade_sketch_race_spec")
+    g.buildLexIndex(lexT, stemmed = false)
+    g.buildSketchTable(skT)
+    g.buildVecIndex(s"$dir/vec", k = 2, iters = 1, nprobe = 2)
     g.put("mv2://t/new", "fresh spark doc about joins")
-    // both classify the same stale stamp unlocked; the maintenance lock
-    // serializes the append leg and the loser re-reads the winner's
-    // restamp — never a second append of the same delta
-    val results = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
-    val ts = (1 to 2).map(_ => new Thread(() =>
-      try results.add(g.refreshLexIndex())
-      catch { case t: Throwable => errors.add(t) }))
-    ts.foreach(_.start()); ts.foreach(_.join(300000))
-    assert(errors.isEmpty, s"refresher failed: ${errors.peek()}")
-    val rs = results.toArray(Array.empty[String]).toSeq.sorted
-    assert(rs == Seq("appended", "fresh"), s"got $rs")
+    // per artifact, both threads classify the same stale stamp unlocked;
+    // the maintenance lock serializes the append leg and the loser
+    // re-reads the winner's restamp — never a second append of the delta
+    Seq[(String, () => String)]("lex" -> (() => g.refreshLexIndex()),
+        "sketch" -> (() => g.refreshSketchTable()),
+        "vec" -> (() => g.refreshVecIndex())).foreach { case (name, refresh) =>
+      val results = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+      val ts = (1 to 2).map(_ => new Thread(() =>
+        try results.add(refresh())
+        catch { case t: Throwable => errors.add(t) }))
+      ts.foreach(_.start()); ts.foreach(_.join(300000))
+      assert(errors.isEmpty, s"$name refresher failed: ${errors.peek()}")
+      val rs = results.toArray(Array.empty[String]).toSeq.sorted
+      assert(rs == Seq("appended", "fresh"), s"$name got $rs")
+    }
     // a double append would double the new doc's term frequencies and
     // move every score off the corpus engine's
-    val served = g.search("spark joins", topK = 10)
+    val served = g.search("spark joins", topK = 10, noSketch = true)
     assert(g.lastSearchRoute == "indexed")
     val corpusPath = Search.search(g.frames.latestActive, "id",
       FrameCols(text = coalesce(col("text"), lit("")), uri = col("uri"),
@@ -229,7 +237,24 @@ class FacadeIndexSpec extends SparkSpec {
       "spark joins", Search.Options(topK = 10, engine = Search.BM25Engine,
         stemmed = false))
     assert(rows(served) == rows(corpusPath))
-    spark.sql("DROP TABLE IF EXISTS `facade_lex_race_spec`")
+    // ... duplicate the new doc's sketch row ...
+    val liveIds = g.frames.latestActive.select(col("id").as("doc_id"))
+    val rebuiltSketch = graft.search.SketchFilter.build(
+      g.frames.latestActive.select(col("id"),
+        coalesce(col("text"), lit("")).as("text")), "id", "text")
+    assert(spark.table(skT).join(liveIds, Seq("doc_id"), "left_semi").count() ==
+      rebuiltSketch.count())
+    // ... and duplicate its (id, cluster) row in the IVF index
+    val h = graft.vector.IvfIndex.read(spark, s"$dir/vec")
+    val want =
+      if (h.floatKernel) graft.vector.VectorSearch.assignClusters(g.embeddingsTable,
+        "vector", h.centroids.map { case (cid, c) => (cid, c.map(_.toFloat)) })
+      else graft.vector.VectorSearch.assignClustersD(g.embeddingsTable, "vector",
+        h.centroids)
+    val (got, exp) = (h.assigned.select("id", "cluster"), want.select("id", "cluster"))
+    assert(got.exceptAll(exp).isEmpty && exp.exceptAll(got).isEmpty,
+      "IVF (id, cluster) rows differ from a rebuild under the same centroids")
+    Seq(lexT, skT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
   }
 
   test("torn lex refresh: the pending marker forces rebuild, never a double append") {
@@ -251,6 +276,32 @@ class FacadeIndexSpec extends SparkSpec {
       "spark joins", Search.Options(topK = 10, engine = Search.BM25Engine))
     assert(rows(served) == rows(corpusPath))
     spark.sql("DROP TABLE IF EXISTS `facade_lex_torn_spec`")
+  }
+
+  test("compaction keeps the torn-refresh marker: the next refresh rebuilds, never a double append") {
+    val g = freshStore()
+    val t = "facade_lex_compact_torn_spec"
+    g.buildLexIndex(t)
+    g.put("mv2://t/new", "fresh spark doc about joins")
+    // simulate a crash after the append and before the restamp
+    spark.sql(s"ALTER TABLE `$t` SET TBLPROPERTIES ('graft.refresh.pending' = '1')")
+    graft.search.Bm25Index.append(
+      g.frames.latestActive.filter(col("uri") === "mv2://t/new")
+        .select(col("id"), coalesce(col("text"), lit("")).as("text")),
+      "id", "text", t, stemmed = true)
+    // the doctor folds the append files; the swap must carry the marker
+    g.doctorRun(graft.api.Doctor.DoctorOptions(bm25FileBudget = Some(0L)),
+      lexTable = Some(t))
+    assert(g.refreshLexIndex() == "rebuilt")
+    val served = g.search("spark joins", topK = 10)
+    assert(g.lastSearchRoute == "indexed")
+    val corpusPath = Search.search(g.frames.latestActive, "id",
+      FrameCols(text = coalesce(col("text"), lit("")), uri = col("uri"),
+        track = col("track"), kind = col("kind"), tags = col("tags"),
+        labels = col("labels"), timestamp = col("timestamp")),
+      "spark joins", Search.Options(topK = 10, engine = Search.BM25Engine))
+    assert(rows(served) == rows(corpusPath))
+    spark.sql(s"DROP TABLE IF EXISTS `$t`")
   }
 
   test("refreshVecIndex: append restores the vector rung under the standing codebook") {
