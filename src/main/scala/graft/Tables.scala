@@ -20,40 +20,26 @@ object Tables {
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
     String, (String, org.apache.spark.sql.types.StructType)]()
 
-  /** freshness stamp for a fixture path: (mtime, length) of a file, or
-    * (dir mtime, fold of child name/mtime/length) of a directory — a
-    * regenerated fixture at the same path invalidates the cached schema
-    * (ADVICE r19: a path-only key silently served stale schemas). One
-    * local stat/listing, orders of magnitude cheaper than the 1-task
-    * inference job it replaces. */
-  private def stamp(p: String): String = {
-    val f = new java.io.File(p)
-    if (f.isDirectory) {
-      val kids = f.listFiles()
-      val fold = if (kids == null) 0L
-        else kids.foldLeft(0L)((a, k) =>
-          a ^ (k.getName.hashCode.toLong * 1315423911L + k.lastModified + k.length))
-      s"${f.lastModified}:$fold"
-    } else s"${f.lastModified}:${f.length}"
-  }
-
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     graft.functions.F.ensureRegistered(spark)
     val p = s"$dir/$name.parquet"
     spark.read.schema(schemaOf(spark, p)).parquet(p)
   }
 
-  /** stamp-cache-served schema of a parquet file/dir (see [[stamp]]) —
-    * shared by the streaming drains, which pay the same footer-inference
-    * job per readStream otherwise (r20) */
+  /** stamp-cache-served schema of a parquet file, dir or glob — shared
+    * by the streaming drains, which pay the same footer-inference job per
+    * readStream otherwise (r20). The key is [[graft.store.Fs.stamp]]: a
+    * regenerated fixture at the same path invalidates the cached schema
+    * (ADVICE r19: a path-only key silently served stale schemas), and an
+    * unstampable path (missing, or a glob with no match) is never cached. */
   def schemaOf(spark: SparkSession, p: String): org.apache.spark.sql.types.StructType = {
-    val st = stamp(p)
+    val st = graft.store.Fs.stamp(spark, p)
     Option(schemaCache.get(p)) match {
-      case Some((`st`, s)) => s
+      case Some((cached, s)) if st.contains(cached) => s
       case _ =>
         val s = spark.read.parquet(p).schema
         if (schemaCache.size > 256) schemaCache.clear() // bound (ADVICE r19)
-        schemaCache.put(p, (st, s))
+        st.foreach(k => schemaCache.put(p, (k, s)))
         s
     }
   }

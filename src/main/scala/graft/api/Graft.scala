@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import graft.ask.{Ask, Embedder}
 import graft.memory.MemoryCards
 import graft.search.{FrameCols, Search, SketchFilter}
-import graft.store.FrameStore
+import graft.store.{FrameStore, Fs}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -405,15 +405,22 @@ final class Graft(val spark: SparkSession, basePath: String,
   }
 
   /** the artifact's serving value on the current store key, cached per
-    * [[storeMovedKey]]: None while its stamp is behind the store */
+    * [[storeMovedKey]]: None while its stamp is behind the store. A stale
+    * verdict keeps the stamp it compared and re-reads only that stamp:
+    * another handle's refresh restamps without moving the key. */
   private def serving[S](a: ServingArtifact[S]): Option[S] = {
     val key = storeMovedKey
+    def fill(st: ServingArtifact.Stamp): Option[S] = {
+      val v = if (st.fresh(currentVersion)) Right(a.open()) else Left(st)
+      a.served = Some((key, v))
+      v.toOption
+    }
     a.served match {
-      case Some((k, v)) if k == key => v
-      case _ =>
-        val v = Option.when(a.stamp().fresh(currentVersion))(a.open())
-        a.served = Some((key, v))
-        v
+      case Some((`key`, Right(v))) => Some(v)
+      case Some((`key`, Left(st))) =>
+        val now = a.stamp()
+        if (now == st) None else fill(now)
+      case _ => fill(a.stamp())
     }
   }
 
@@ -683,17 +690,16 @@ final class Graft(val spark: SparkSession, basePath: String,
     // a missing table with a .__rebuild/.__old sibling is a crashed
     // repairCards swap — recover the orphan instead of serving empty
     // (ADVICE r19); no-cost for healthy stores (guarded on absence)
-    if (!new java.io.File(cardsPath).exists) {
-      val dst = new org.apache.hadoop.fs.Path(cardsPath)
-      val hfs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hfs = Fs.of(spark, cardsPath)
+    val dst = new org.apache.hadoop.fs.Path(cardsPath)
+    if (!hfs.exists(dst))
       Seq(s"$cardsPath.__rebuild", s"$cardsPath.__old").foreach { cand =>
         val p = new org.apache.hadoop.fs.Path(cand)
         if (!hfs.exists(dst) && hfs.exists(p)) hfs.rename(p, dst): Unit
       }
-    }
     // explicit schema (the table is only ever written with this shape):
     // skips the 1-task footer-inference job per open (r19)
-    if (new java.io.File(cardsPath).exists)
+    if (hfs.exists(dst))
       spark.read.schema(Graft.cardsSchema).parquet(cardsPath)
     else Seq.empty[(Long, String, String, String, String, String, Timestamp, Long)]
       .toDF("cardId", "entity", "slot", "value", "kind", "relation", "ts", "sourceFrameId")
@@ -833,14 +839,13 @@ final class Graft(val spark: SparkSession, basePath: String,
     // The swap is an FS rename (the vacuum() pattern) — the former
     // read-tmp-and-rewrite was a second full pass over the rebuilt table
     // for no value (guide §1.2: don't compute things you throw away).
-    // Hadoop FS, not java.io.File: the store path may be non-local (hdfs/s3a)
     val tmp = s"$cardsPath.__rebuild"
     rebuilt.write.mode(SaveMode.Overwrite).parquet(tmp)
     val n = spark.read.parquet(tmp).count()
     val tmpPath = new org.apache.hadoop.fs.Path(tmp)
     val dstPath = new org.apache.hadoop.fs.Path(cardsPath)
     val oldPath = new org.apache.hadoop.fs.Path(s"$cardsPath.__old")
-    val hfs = tmpPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hfs = Fs.of(spark, tmp)
     // rename-rename-delete (ADVICE r19): the former delete(dst)+rename
     // left NO cards dir if crashed between the two — cards() then
     // silently served empty. Now the old table is renamed ASIDE first,

@@ -104,8 +104,9 @@ private[api] sealed abstract class ServingArtifact[S](val g: Graft) {
     * keeps its own lock for correctness). */
   def idle: Boolean = graft.store.StoreLock.currentOwner(spark, lockAnchor).isEmpty
 
-  /** the serving value per store key: None = stale, Some(s) = current */
-  @volatile private[api] var served: Option[((Long, Long), Option[S])] = None
+  /** the serving value per store key: Right(s) = current, Left(stamp) =
+    * stale at the stamp it compared */
+  @volatile private[api] var served: Option[((Long, Long), Either[ServingArtifact.Stamp, S])] = None
 
   /** the catch-up's frames: the held rows as a local relation, or the
     * log's post-stamp Active rows */
@@ -186,11 +187,11 @@ private[api] object ServingArtifact {
         withPositions = withPositions)
       restamp(g.currentVersion)
     }
-    def rebuild(): Unit = build(
-      if (!spark.catalog.tableExists(table)) 16
-      else spark.sessionState.catalog.getTableMetadata(TableIdentifier(table))
-        .bucketSpec.map(_.numBuckets).getOrElse(16),
-      partitionByTrack = false, withPositions = false)
+    def rebuild(): Unit = {
+      Bm25Index.rebuild(idText(g.frames.latestActive, tracked), "id", "text",
+        table, stemmed)
+      restamp(g.currentVersion)
+    }
     // a track-partitioned table's delta lands in its partition directories
     def delta(how: CatchUp): Option[DataFrame] = Some(idText(deltaFrames(how), tracked))
     def appendDelta(rows: DataFrame): Unit = {
@@ -232,7 +233,7 @@ private[api] object ServingArtifact {
     * covers DOCUMENT frames only (the embeddingsTable population) */
   final class IvfDir(g: Graft, val path: String, val nprobe: Int, embedder: Embedder)
       extends ServingArtifact[IvfIndex.Handle](g) {
-    private def fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    private def fs = graft.store.Fs.of(spark, path)
     private val versionPath = new Path(s"$path/$VersionFile")
     private val pendingPath = new Path(s"$path/$PendingFile")
 

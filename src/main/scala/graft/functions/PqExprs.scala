@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -57,6 +58,20 @@ object PqKernels {
   }
 }
 
+/** the literal-argument contract both PQ expressions check at analysis:
+  * the second child is evaluated once with no input row, so a column
+  * reference or a wrongly-shaped literal must fail analysis by name */
+private object PqLiteralArg {
+  def check(fn: String, e: Expression, want: String)(
+      shape: PartialFunction[DataType, Unit]): TypeCheckResult =
+    if (!e.foldable)
+      TypeCheckResult.TypeCheckFailure(s"$fn: the second argument must be a literal $want, not ${e.sql}")
+    else if (!shape.isDefinedAt(e.dataType))
+      TypeCheckResult.TypeCheckFailure(
+        s"$fn: the second argument must be $want, not ${e.dataType.simpleString}")
+    else TypeCheckResult.TypeCheckSuccess
+}
+
 /** `pq_encode(vec, codebooksLit)` → array<int> of per-subspace codes.
   * The codebook child must be FOLDABLE (a literal): it is evaluated once
   * at plan time into a primitive float[][][] and shipped to generated
@@ -65,6 +80,9 @@ case class PqEncodeExpr(left: Expression, right: Expression)
     extends BinaryExpression {
   override def prettyName: String = "pq_encode"
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def checkInputDataTypes(): TypeCheckResult =
+    PqLiteralArg.check(prettyName, right, "array<array<array<float>>>") {
+      case ArrayType(ArrayType(ArrayType(FloatType, _), _), _) => }
 
   @transient private lazy val cb: Array[Array[Array[Float]]] = {
     val a = right.eval(null).asInstanceOf[ArrayData]
@@ -93,6 +111,9 @@ case class PqAsymmetricExpr(left: Expression, right: Expression)
     extends BinaryExpression {
   override def prettyName: String = "pq_adist"
   override def dataType: DataType = DoubleType
+  override def checkInputDataTypes(): TypeCheckResult =
+    PqLiteralArg.check(prettyName, right, "array<array<double>>") {
+      case ArrayType(ArrayType(DoubleType, _), _) => }
 
   @transient private lazy val tbl: Array[Array[Double]] = {
     val a = right.eval(null).asInstanceOf[ArrayData]

@@ -26,10 +26,8 @@ object Bucketing {
                     partitionCols: Seq[String] = Nil): Unit = {
     val spark = df.sparkSession
     spark.sql(s"DROP TABLE IF EXISTS `$tableName`")
-    val loc = new org.apache.hadoop.fs.Path(
+    graft.store.Fs.deleteRecursively(spark,
       spark.conf.get("spark.sql.warehouse.dir") + "/" + tableName.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
     val w = df.write
       .bucketBy(nBuckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)

@@ -800,8 +800,8 @@ object AnalyticsQueries {
     // re-enrichment anywhere in the WAL→index→enrich chain breaks the
     // hash. ----
     "stream_ingest_enrich" -> QueryDef.sql(
-      (s, d) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-st1")
+      (s, d) => Scratch(s, "graft-st1") { dir =>
+        val tmp = java.nio.file.Paths.get(dir)
         val in = tmp.resolve("in"); java.nio.file.Files.createDirectories(in)
         val fixture = Tables.documents(s, d).filter(col("doc_id") < 40)
           .select(col("doc_id"),
@@ -827,7 +827,6 @@ object AnalyticsQueries {
             col("contentHash").as("content_hash"),
             lit(secondPass).as("second_pass_new"))
           .orderBy(col("doc_id"))
-          .localCheckpoint() // detach from the temp dirs
       },
       s"""SELECT doc_id,
          |  CAST(len(${DedupQueries.duckToks.replace("text", "line")}) AS INT) AS n_tok,
@@ -875,8 +874,8 @@ object AnalyticsQueries {
     // file read), a lost row (offset skipped), or a crash-free first run
     // all fail the hash. ----
     "stream_restart_recovery" -> QueryDef.sql(
-      (s, d) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-st-recover")
+      (s, d) => Scratch(s, "graft-st-recover") { dir =>
+        val tmp = java.nio.file.Paths.get(dir)
         val in = tmp.resolve("in"); java.nio.file.Files.createDirectories(in)
         val sink = tmp.resolve("sink").toString
         val ck = tmp.resolve("ck").toString
@@ -929,7 +928,6 @@ object AnalyticsQueries {
             graft.functions.F.polyHash(col("text")).as("content_hash"))
           .withColumn("crashed_mid_drain", lit(crashed))
           .orderBy(col("doc_id"))
-          .localCheckpoint() // detach from the temp dirs
       },
       s"""SELECT doc_id,
          |  CAST(len(${DedupQueries.duckToks.replace("text", "line")}) AS INT) AS n_tok,
@@ -953,8 +951,8 @@ object AnalyticsQueries {
     // A dropped batch, a double-appended replay, or a bucket-spec drift
     // all fail the hash. ----
     "stream_bm25_append" -> QueryDef.sql(
-      (s, d) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-st-bm25")
+      (s, d) => Scratch(s, "graft-st-bm25", "stream_bm25_gate") { dir =>
+        val tmp = java.nio.file.Paths.get(dir)
         val in = tmp.resolve("in"); java.nio.file.Files.createDirectories(in)
         Tables.documents(s, d).filter(col("doc_id") < 40)
           .select(col("doc_id"),
@@ -965,33 +963,21 @@ object AnalyticsQueries {
               in.resolve(s"doc_${r.getLong(0)}.txt"), r.getString(1))
           }
         // a previous aborted run (bench re-runs share the warehouse) may
-        // have left the table or its location — same hygiene as
+        // have left the table's location — same hygiene as
         // Bucketing.writeBucketed
-        s.sql("DROP TABLE IF EXISTS stream_bm25_gate")
-        val loc = new org.apache.hadoop.fs.Path(
+        graft.store.Fs.deleteRecursively(s,
           s.conf.get("spark.sql.warehouse.dir") + "/stream_bm25_gate")
-        val lfs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (lfs.exists(loc)) lfs.delete(loc, true)
         val ck = tmp.resolve("ck").toString
         val q = graft.streaming.StreamingIngest.runBm25IndexStream(
           s, in.toString, "stream_bm25_gate", ck,
           b => b.select(regexp_extract(col("uri"), "doc_(\\d+)\\.txt$", 1)
             .cast("long").as("doc_id"), col("text")))
         q.awaitTermination()
-        val nBatches = Option(new java.io.File(s"$ck/offsets").list())
-          .map(_.count(f => !f.endsWith(".tmp") && !f.startsWith("."))).getOrElse(0)
-        val out = graft.search.Bm25Index.search(s, "stream_bm25_gate",
+        val nBatches = Scratch.offsetBatches(s, ck)
+        graft.search.Bm25Index.search(s, "stream_bm25_gate",
             Seq("spark", "join", "window"), topK = 10)
           .drop("n_terms_matched")
           .withColumn("multi_batch", lit(nBatches >= 3))
-          .localCheckpoint() // detach from the warehouse table + temp dirs
-        s.sql("DROP TABLE IF EXISTS stream_bm25_gate")
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(tmp.toFile)
-        out
       },
       s"""WITH toks AS (SELECT doc_id, unnest(${DedupQueries.duckToks}) AS term
          |              FROM documents WHERE doc_id < 40),

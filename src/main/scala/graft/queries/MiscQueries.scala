@@ -588,10 +588,8 @@ object MiscQueries {
     // the oracle re-derives every id, score, snippet, and answer string
     // closed-form. ----
     "ask_graph_route" -> QueryDef.sql(
-      (s, d) => {
+      (s, d) => Scratch(s, "graft_askroute_gate") { dir =>
         import s.implicits._
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_askroute_gate").toString
         val g = new graft.api.Graft(s, dir)
         Seq("Alice lives in Lisbon.",
             "Bob Stone works at Acme Corp.",
@@ -609,13 +607,10 @@ object MiscQueries {
           r.citations.map(c => (nm, r.engine, r.sources.mkString(","),
             c.index.toLong, c.id, c.score, c.snippet, r.answer))
         }
-        val out = rows.toDF("scenario", "engine", "rungs", "citation_idx",
+        rows.toDF("scenario", "engine", "rungs", "citation_idx",
             "cit_id", "score", "snippet", "answer")
           .withColumn("score", round(col("score"), 9))
           .orderBy(col("scenario"), col("citation_idx"))
-          .localCheckpoint() // detach before deleting the store
-        VectorQueries.deleteRecursively(new java.io.File(dir))
-        out
       },
       s"""WITH g AS (SELECT ROUND(CAST(2 AS DOUBLE)/3 * (CAST(1 AS DOUBLE) - CAST(1 AS DOUBLE)/2), 9) AS s),
          |r(scenario, engine, rungs, citation_idx, cit_id, score, snippet, answer) AS (
@@ -670,7 +665,7 @@ object MiscQueries {
     // directly, so a drop, reorder, mis-quote, or header mix-up anywhere
     // in extract → export → re-read fails the hash. ----
     "table_export_roundtrip" -> QueryDef.sql(
-      (s, d) => {
+      (s, d) => Scratch(s, "graft-export") { dir =>
         import s.implicits._
         val ns = Tables.nation(s, d)
           .select(col("n_nationkey").cast("long"), col("n_name"))
@@ -679,13 +674,10 @@ object MiscQueries {
           ns.map { case (k, n) => s"| $k | $n |" }.mkString("\n")
         val tables = ExtractedTables.extract(
           Seq((9L, md)).toDF("id", "text"), "id", "text")
-        val dir = java.nio.file.Files.createTempDirectory("graft-export").toString
         ExtractedTables.exportCsvSharded(tables, 9L * 1048576, dir, n = 4)
-        val back = s.read.option("header", "true").csv(dir)
+        s.read.option("header", "true").csv(dir)
           .select(col("key").cast("long").as("key"), col("name"))
           .orderBy(col("key"))
-          .localCheckpoint() // detach from the temp dir before it ages out
-        back
       },
       """SELECT n_nationkey AS key, n_name AS name
         |FROM nation ORDER BY key""".stripMargin),
@@ -1182,14 +1174,12 @@ object MiscQueries {
     // semantics (no rank cut to replay). Search terms are outside the
     // auto-tag vocabulary, so the Word predicate reduces to tokens. ----
     "replay_e2e_session" -> QueryDef.sql(
-      (s, d) => {
+      (s, d) => Scratch(s, "graft_e2e_gate") { dir =>
         import s.implicits._
         import graft.replay.Replay
         val fixture = Tables.documents(s, d).filter(col("doc_id") < 12)
           .select(col("doc_id"), col("text")).orderBy(col("doc_id")).collect()
           .map(r => (r.getLong(0), r.getString(1))).toSeq
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_e2e_gate").toString
         val g = new graft.api.Graft(s, dir)
         g.startSession("e2e", autoCheckpointInterval = 4)
         fixture.foreach { case (id, text) => g.put(s"mv2://e2e/$id", text) }
@@ -1214,7 +1204,7 @@ object MiscQueries {
           sum(when(col("actionType") === "ask", 1L).otherwise(0L)).as("n_ask"),
           sum(when(col("actionType") === "checkpoint", 1L).otherwise(0L))
             .as("n_checkpoint")).head
-        val out = cmp
+        cmp
           .select(col("seq"), col("input"),
             col("actualHash").as("result_hash"), col("matched"))
           .withColumn("session_id", lit(summary.sessionId))
@@ -1230,9 +1220,6 @@ object MiscQueries {
           .withColumn("match_rate_pm",
             lit(if (totalN == 0) 1000L else matchedN * 1000L / totalN))
           .orderBy(col("seq"))
-          .localCheckpoint() // detach before deleting the store
-        VectorQueries.deleteRecursively(new java.io.File(dir))
-        out
       },
       s"""WITH t AS (SELECT * FROM (VALUES (CAST(0 AS BIGINT), 'data'),
          |  (CAST(1 AS BIGINT), 'spark'), (CAST(2 AS BIGINT), 'join')) v(seq, input)),

@@ -29,16 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object ServeQueries {
 
-  /** Pin a bounded leg page as a LOCAL relation (r20, guide §1.2): one
-    * collect job serves the leg — the former per-leg localCheckpoint paid
-    * the same materialization plus RDD block management, and the final
-    * union needed its own detach job. Legs are ≤ topK rows by
-    * construction, and a local relation is store-independent by nature
-    * (safe across the fixture's later mutations and teardown). */
-  private def pin(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(df.collect(): _*), df.schema)
-
   /** oracle-side tokenizer fragment (must mirror F.tokens) */
   private val duckToks =
     "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9&@+/_]+'), x -> regexp_matches(x, '[a-z0-9]'))"
@@ -190,9 +180,7 @@ object ServeQueries {
     // leg 'reserved' serves the identical page from the index again —
     // the maintain→serve loop closed under one oracle. ----
     "search_facade_indexed" -> QueryDef.sql(
-      (s, d) => {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_facade_serve").toString
+      (s, d) => Scratch(s, "graft_facade_serve", "facade_lex_serve_gate") { dir =>
         val g = new graft.api.Graft(s, dir)
         val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
           .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
@@ -200,7 +188,7 @@ object ServeQueries {
         g.buildLexIndex("facade_lex_serve_gate", stemmed = false)
         def leg(name: String) = {
           val hits = g.search("spark join window", topK = 25)
-          pin(hits.select(lit(name).as("leg"),
+          Scratch.local(hits.select(lit(name).as("leg"),
               lit(g.lastSearchRoute).as("route"),
               col("id"), col("score"))) // pin BEFORE the next mutation
         }
@@ -209,11 +197,7 @@ object ServeQueries {
         val l2 = leg("stale_corpus")
         g.buildLexIndex("facade_lex_serve_gate", stemmed = false)
         val l3 = leg("reserved")
-        val out = l1.union(l2).union(l3) // legs are local relations
-          .orderBy(col("leg"), col("score").desc, col("id"))
-        s.sql("DROP TABLE IF EXISTS `facade_lex_serve_gate`")
-        VectorQueries.deleteRecursively(new java.io.File(dir))
-        out
+        l1.union(l2).union(l3).orderBy(col("leg"), col("score").desc, col("id"))
       },
       s"""WITH base AS (SELECT row_number() OVER (ORDER BY doc_id) AS id, text
          |              FROM documents),
@@ -240,14 +224,10 @@ object ServeQueries {
     // set changes the subset stats and reshuffles every score). Leg c
     // re-applies the filter after a put + O(delta) refreshes of BOTH
     // artifacts over the moved corpus. ----
-    "search_facade_sketch" -> QueryDef.sql(
-      (s, d) => {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_facade_sketch").toString
-        val tbl = "facade_sketch_lex_gate"
-        val skt = "facade_sketch_tbl_gate"
-        s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-        s.sql(s"DROP TABLE IF EXISTS `$skt`")
+    "search_facade_sketch" -> QueryDef.sql((s, d) => {
+      val tbl = "facade_sketch_lex_gate"
+      val skt = "facade_sketch_tbl_gate"
+      Scratch(s, "graft_facade_sketch", tbl, skt) { dir =>
         val g = new graft.api.Graft(s, dir)
         val docs = Tables.documents(s, d).filter(col("doc_id") < 240)
           .select(col("doc_id"), col("text"))
@@ -258,7 +238,7 @@ object ServeQueries {
         def leg(name: String, noSketch: Boolean) = {
           val hits = g.search("spark join window", topK = 25,
             noSketch = noSketch)
-          pin(hits.select(lit(name).as("leg"),
+          Scratch.local(hits.select(lit(name).as("leg"),
               lit(g.lastSearchRoute).as("route"),
               lit(g.lastSketchApplied).as("sketch_applied"),
               col("id"), col("score"))) // pin BEFORE the next mutation
@@ -269,13 +249,9 @@ object ServeQueries {
         assert(g.refreshLexIndex() == "appended")
         assert(g.refreshSketchTable() == "appended")
         val l3 = leg("c_refreshed", noSketch = false)
-        val out = l1.union(l2).union(l3) // legs are local relations
-          .orderBy(col("leg"), col("score").desc, col("id"))
-        s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-        s.sql(s"DROP TABLE IF EXISTS `$skt`")
-        VectorQueries.deleteRecursively(new java.io.File(dir))
-        out
-      },
+        l1.union(l2).union(l3).orderBy(col("leg"), col("score").desc, col("id"))
+      }
+    },
       s"""WITH base AS (SELECT row_number() OVER (ORDER BY doc_id) AS id, text
          |              FROM documents WHERE doc_id < 240),
          |nn AS (SELECT COUNT(*) AS n FROM base),
@@ -303,12 +279,9 @@ object ServeQueries {
     // stamp (route stays indexed) and every score bit-equal. Legs
     // b_healed and c_compacted carry WHICH executed doctor action healed
     // them, locked as constants. ----
-    "store_doctor_serve" -> QueryDef.sql(
-      (s, d) => {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_doctor_serve").toString
-        val tbl = "doctor_serve_lex_gate"
-        s.sql(s"DROP TABLE IF EXISTS `$tbl`")
+    "store_doctor_serve" -> QueryDef.sql((s, d) => {
+      val tbl = "doctor_serve_lex_gate"
+      Scratch(s, "graft_doctor_serve", tbl) { dir =>
         val g = new graft.api.Graft(s, dir)
         // fixture budget: the doctor legs pay 2 probes + rebuild +
         // compact on top of the serve legs — 240 docs exercise the
@@ -321,7 +294,7 @@ object ServeQueries {
         g.buildLexIndex(tbl, stemmed = false)
         def leg(name: String, healedBy: String) = {
           val hits = g.search("spark join window", topK = 25)
-          pin(hits.select(lit(name).as("leg"),
+          Scratch.local(hits.select(lit(name).as("leg"),
               lit(g.lastSearchRoute).as("route"),
               lit(healedBy).as("healed_by"), col("id"), col("score")))
         }
@@ -344,12 +317,9 @@ object ServeQueries {
           .filter(r => r.name == "compact_lex_index" && r.executed)
           .map(_.name).headOption.getOrElse("missing")
         val l3 = leg("c_compacted", compacted)
-        val out = l1.union(l2).union(l3) // legs are local relations
-          .orderBy(col("leg"), col("score").desc, col("id"))
-        s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-        VectorQueries.deleteRecursively(new java.io.File(dir))
-        out
-      },
+        l1.union(l2).union(l3).orderBy(col("leg"), col("score").desc, col("id"))
+      }
+    },
       s"""WITH base AS (SELECT row_number() OVER (ORDER BY doc_id) AS id, text
          |              FROM documents WHERE doc_id < 240),
          |nn AS (SELECT COUNT(*) AS n FROM base),
@@ -378,13 +348,10 @@ object ServeQueries {
     // subset-stats OR page), the RRF fusion, and the top-5 — a rank
     // drift anywhere in either list reshuffles the fused page and
     // hash-fails. ----
-    "ask_lex_indexed" -> QueryDef.sql(
-      (s, d) => {
+    "ask_lex_indexed" -> QueryDef.sql((s, d) => {
+      val tbl = "ask_lex_serve_gate"
+      Scratch(s, "graft_ask_lex_serve", tbl) { dir =>
         import s.implicits._
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_ask_lex_serve").toString
-        val tbl = "ask_lex_serve_gate"
-        s.sql(s"DROP TABLE IF EXISTS `$tbl`")
         val g = new graft.api.Graft(s, dir)
         val docs = Tables.documents(s, d).filter(col("doc_id") < 240)
           .select(col("doc_id"), col("text"))
@@ -408,11 +375,9 @@ object ServeQueries {
           AskLexTerms.mkString(" ") + " " + AskLexTerms.take(2).mkString(" "))),
           enrich = false, chunkLargeDocs = false)
         val l2 = leg("b_stale_corpus")
-        val out = l1.union(l2).orderBy(col("leg"), col("citation_idx"))
-        s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-        VectorQueries.deleteRecursively(new java.io.File(dir))
-        out
-      },
+        l1.union(l2).orderBy(col("leg"), col("citation_idx"))
+      }
+    },
       s"""WITH base AS (SELECT row_number() OVER (ORDER BY doc_id) AS id, text
          |              FROM documents WHERE doc_id < 240),
          |nn AS (SELECT COUNT(*) AS n FROM base),
@@ -443,11 +408,9 @@ object ServeQueries {
     // What the index buys is WHERE the work happens (pruned partition
     // scans, locked in PlanPropertiesSpec), never what comes back. ----
     "ask_vec_indexed" -> QueryDef.sql(
-      (s, d) => {
+      (s, d) => Scratch(s, "graft_askvec_idx") { dir =>
         import s.implicits._
         graft.functions.F.ensureRegistered(s)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_askvec_idx").toString
         val docs = Tables.documents(s, d)
           .withColumn("uri", concat(lit("doc://"), col("source"), lit("/"), col("doc_id")))
         val f = FrameCols(text = col("text"), uri = col("uri"),
@@ -464,12 +427,9 @@ object ServeQueries {
           correctionUriPrefix = "doc://correction/", ann = Some(ann))
         val resp = graft.ask.Ask.ask(s, corpus, MiscQueries.AskQuestion,
           Some(new HashEmbedder(64)))
-        val out = resp.citations.map(c => (c.index.toLong, c.id, c.score))
+        resp.citations.map(c => (c.index.toLong, c.id, c.score))
           .toDF("citation_idx", "doc_id", "score")
           .withColumn("score", round(col("score"), 9))
-          // driver-built rows: already a local relation, nothing to detach
-        VectorQueries.deleteRecursively(new java.io.File(dir))
-        out
       },
       MiscQueries.askCitationsOracle),
 
@@ -481,10 +441,8 @@ object ServeQueries {
     // every score is ROUND((1/(61+tl) + 1/(61+vr)) * (1+cos), 9) with
     // cos computed by DuckDB from the inlined HashEmbedder vectors. ----
     "ask_facade_indexed" -> QueryDef.sql(
-      (s, d) => {
+      (s, d) => Scratch(s, "graft_facade_askvec") { dir =>
         import s.implicits._
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_facade_askvec").toString
         val g = new graft.api.Graft(s, dir)
         FacadeDocs.zipWithIndex.foreach { case (t, i) =>
           g.put(s"mv2://serve/$i", t)
@@ -502,9 +460,7 @@ object ServeQueries {
         g.put("mv2://serve/extra", FacadeExtra)
         g.buildVecIndex(s"$dir/vec", k = 2, iters = 1, nprobe = 2)
         val l2 = leg("leg2")
-        val out = l1.union(l2).orderBy(col("leg"), col("citation_idx"))
-        VectorQueries.deleteRecursively(new java.io.File(dir))
-        out
+        l1.union(l2).orderBy(col("leg"), col("citation_idx"))
       },
       s"""WITH q(qv) AS (VALUES (${vecLit(FacadeAskQ)}::DOUBLE[])),
          |v1(id, tl_rank, txt, vec) AS (VALUES
@@ -538,12 +494,9 @@ object ServeQueries {
     // the moved corpus from the index; a DELETE breaks the append
     // contract, refresh says so (action 'rebuilt') and leg (c) serves
     // the shrunk-back corpus — bit-equal to leg (a)'s scores. ----
-    "search_facade_refresh" -> QueryDef.sql(
-      (s, d) => {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_facade_refresh").toString
-        val tbl = "facade_lex_refresh_gate"
-        s.sql(s"DROP TABLE IF EXISTS `$tbl`")
+    "search_facade_refresh" -> QueryDef.sql((s, d) => {
+      val tbl = "facade_lex_refresh_gate"
+      Scratch(s, "graft_facade_refresh", tbl) { dir =>
         val g = new graft.api.Graft(s, dir)
         val docs = Tables.documents(s, d).filter(col("doc_id") < 240)
           .select(col("doc_id"), col("text"))
@@ -552,7 +505,7 @@ object ServeQueries {
         g.buildLexIndex(tbl, stemmed = false)
         def leg(name: String, action: String, filesGrew: String) = {
           val hits = g.search("spark join window", topK = 25)
-          pin(hits.select(lit(name).as("leg"),
+          Scratch.local(hits.select(lit(name).as("leg"),
               lit(g.lastSearchRoute).as("route"),
               lit(action).as("action"), lit(filesGrew).as("files_grew"),
               col("id"), col("score"))) // pin BEFORE the next mutation
@@ -566,12 +519,9 @@ object ServeQueries {
         g.delete(extraId) // tombstone: beyond the append contract
         val act2 = g.refreshLexIndex()
         val l3 = leg("c_rebuilt", act2, "na")
-        val out = l1.union(l2).union(l3) // legs are local relations
-          .orderBy(col("leg"), col("score").desc, col("id"))
-        s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-        VectorQueries.deleteRecursively(new java.io.File(dir))
-        out
-      },
+        l1.union(l2).union(l3).orderBy(col("leg"), col("score").desc, col("id"))
+      }
+    },
       s"""WITH base AS (SELECT row_number() OVER (ORDER BY doc_id) AS id, text
          |              FROM documents WHERE doc_id < 240),
          |nn AS (SELECT COUNT(*) AS n FROM base),
@@ -597,10 +547,8 @@ object ServeQueries {
     // the brute-force oracle regardless of which codebook assigned the
     // delta. ----
     "ask_vec_refresh" -> QueryDef.sql(
-      (s, d) => {
+      (s, d) => Scratch(s, "graft_facade_vecrefresh") { dir =>
         import s.implicits._
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_facade_vecrefresh").toString
         val g = new graft.api.Graft(s, dir)
         FacadeDocs.zipWithIndex.foreach { case (t, i) =>
           g.put(s"mv2://vecrefresh/$i", t)
@@ -618,9 +566,7 @@ object ServeQueries {
         g.put("mv2://vecrefresh/extra", FacadeExtra)
         val act = g.refreshVecIndex()
         val l2 = leg("leg2", act)
-        val out = l1.union(l2).orderBy(col("leg"), col("citation_idx"))
-        VectorQueries.deleteRecursively(new java.io.File(dir))
-        out
+        l1.union(l2).orderBy(col("leg"), col("citation_idx"))
       },
       s"""WITH q(qv) AS (VALUES (${vecLit(FacadeAskQ)}::DOUBLE[])),
          |v1(id, tl_rank, txt, vec) AS (VALUES
@@ -906,12 +852,9 @@ object ServeQueries {
     // the doctor probes `sketch_stale` on the facade-attached table and
     // plans/executes the always-append `refresh_sketch_table` heal; the
     // post-heal classification ("fresh") is locked as the third row. ----
-    "store_doctor_sketch" -> QueryDef.sql(
-      (s, d) => {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_doctor_sketch").toString
-        val skt = "doctor_sketch_tbl_gate"
-        s.sql(s"DROP TABLE IF EXISTS `$skt`")
+    "store_doctor_sketch" -> QueryDef.sql((s, d) => {
+      val skt = "doctor_sketch_tbl_gate"
+      Scratch(s, "graft_doctor_sketch", skt) { dir =>
         val g = new graft.api.Graft(s, dir)
         val docs = Tables.documents(s, d).filter(col("doc_id") < 240)
           .select(col("doc_id"), col("text"))
@@ -927,14 +870,12 @@ object ServeQueries {
             x.detailN, x.executed))
         val post = Seq(("post", "post", "sketch_refresh_outcome", false,
           g.refreshSketchTable(), 0L, true))
-        val out = (planned ++ post)
+        (planned ++ post)
           .toDF("row_type", "phase", "name", "required", "reason",
             "detail_n", "executed")
-          .orderBy($"row_type", $"name") // driver-built local relation
-        s.sql(s"DROP TABLE IF EXISTS `$skt`")
-        VectorQueries.deleteRecursively(new java.io.File(dir))
-        out
-      },
+          .orderBy($"row_type", $"name")
+      }
+    },
       """SELECT * FROM (VALUES
         |  ('action', 'index_rebuild', 'refresh_sketch_table', TRUE, 'sketch_stale', CAST(1 AS BIGINT), TRUE),
         |  ('finding', 'probe', 'sketch_stale', FALSE, 'warning', CAST(1 AS BIGINT), FALSE),

@@ -20,12 +20,10 @@ object StoreQueries {
   def defs: Map[String, QueryDef] = Map(
 
     "store_put_lifecycle" -> QueryDef.sql(
-      (s, d) => {
+      (s, d) => Scratch(s, "graft_store_gate") { dir =>
         val docs = Tables.documents(s, d).filter(col("doc_id") < 60)
           .select(col("doc_id"), col("text")).orderBy(col("doc_id")).collect()
           .map(r => (s"mv2://gate/${r.getLong(0)}", r.getString(1))).toSeq
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_store_gate").toString
         val store = new FrameStore(s, dir)
         // batch 1: docs 0..39
         val ids1 = store.put(docs.take(40))
@@ -58,12 +56,10 @@ object StoreQueries {
     // five supersedes, and two tombstones. The oracle states the expected
     // classification per uri directly from the fixture's construction. ----
     "store_version_diff" -> QueryDef.sql(
-      (s, d) => {
+      (s, d) => Scratch(s, "graft_store_diff") { dir =>
         val docs = Tables.documents(s, d).filter(col("doc_id") < 60)
           .select(col("doc_id"), col("text")).orderBy(col("doc_id")).collect()
           .map(r => (s"mv2://gate/${r.getLong(0)}", r.getString(1))).toSeq
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_store_diff").toString
         val store = new FrameStore(s, dir)
         val ids1 = store.put(docs.take(40))
         val seq1 = store.log.agg(max(col("commitSeq"))).head.getLong(0)
@@ -94,12 +90,10 @@ object StoreQueries {
     // corruption, truncation, or re-encode of the binary column between
     // write and read breaks the hash. ----
     "store_blob_roundtrip" -> QueryDef.sql(
-      (s, d) => {
+      (s, d) => Scratch(s, "graft_blob_gate") { dir =>
         val docs = Tables.documents(s, d).filter(col("doc_id") < 40)
           .select(col("doc_id"), col("text")).orderBy(col("doc_id")).collect()
           .map(r => (s"mv2://blob/${r.getLong(0)}", r.getString(1))).toSeq
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_blob_gate").toString
         val store = new FrameStore(s, dir)
         store.put(docs, chunkLargeDocs = false)
         store.latestActive
@@ -109,7 +103,6 @@ object StoreQueries {
             md5(col("payload")).as("payload_md5"),
             length(col("payload")).cast("long").as("n_bytes"))
           .orderBy(col("doc_id"))
-          .localCheckpoint() // detach from the temp store before cleanup
       },
       """SELECT doc_id, md5(text) AS payload_md5,
         |  CAST(strlen(text) AS BIGINT) AS n_bytes
@@ -127,13 +120,11 @@ object StoreQueries {
     // construction implies; the big doc splits into exactly 2 chunks
     // (two ~816-char paragraphs vs the 1200-char chunk budget). ----
     "store_doctor_report" -> QueryDef.sql(
-      (s, d) => {
+      (s, d) => Scratch(s, "graft_doctor_gate") { dir =>
         import s.implicits._
         val docs = Tables.documents(s, d).filter(col("doc_id") < 10)
           .select(col("doc_id"), col("text")).orderBy(col("doc_id")).collect()
           .map(r => (s"mv2://doc/${r.getLong(0)}", r.getString(1))).toSeq
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_doctor_gate").toString
         val g = new graft.api.Graft(s, dir)
         // one batch append for the healthy corpus — ten per-doc facade
         // puts cost ten write jobs for identical doctor counts (the
@@ -177,13 +168,11 @@ object StoreQueries {
     // WARNING survives untouched (electing a version is destructive;
     // doctor reports, never destroys). Every row is fixture-implied. ----
     "store_doctor_plan" -> QueryDef.sql(
-      (s, d) => {
+      (s, d) => Scratch(s, "graft_doctor_plan_gate", "doctor_lex_gate") { dir =>
         import s.implicits._
         val docs = Tables.documents(s, d).filter(col("doc_id") < 10)
           .select(col("doc_id"), col("text")).orderBy(col("doc_id")).collect()
           .map(r => (s"mv2://doc/${r.getLong(0)}", r.getString(1))).toSeq
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_doctor_plan_gate").toString
         val g = new graft.api.Graft(s, dir)
         g.frames.put(docs)
         val para = "spark merge row scan value table. " * 24
@@ -209,17 +198,9 @@ object StoreQueries {
         val dry = g.doctorRun(opts.copy(dryRun = true),
           lexTable = Some("doctor_lex_gate"))
         val app = g.doctorRun(opts, lexTable = Some("doctor_lex_gate"))
-        val out = dry.toDF(s).withColumn("run", lit("dry"))
+        dry.toDF(s).withColumn("run", lit("dry"))
           .unionByName(app.toDF(s).withColumn("run", lit("apply")))
           .orderBy(col("run"), col("ord"))
-          .localCheckpoint() // detach from the temp store + warehouse table
-        s.sql("DROP TABLE IF EXISTS doctor_lex_gate")
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(new java.io.File(dir))
-        out
       },
       """SELECT CAST(ord AS BIGINT) AS ord, row_type, phase, name, required,
         |  reason, CAST(detail_n AS BIGINT) AS detail_n, executed, run
@@ -284,10 +265,8 @@ object StoreQueries {
     // the retrained centroid (13,0) has mean distortion 2/3 < 1. Every
     // number is fixture arithmetic. ----
     "store_doctor_maintain" -> QueryDef.sql(
-      (s, d) => {
+      (s, d) => Scratch(s, "graft_doctor_maint_gate", "doctor_maint_lex") { dir =>
         import s.implicits._
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_doctor_maint_gate").toString
         val g = new graft.api.Graft(s, dir)
         g.frames.put(Seq(
           ("mv2://m/0", "alpha bravo packet"),
@@ -309,8 +288,7 @@ object StoreQueries {
             nBuckets = 1)
         }
         // persisted IVF index with one drifted cluster (exact arithmetic)
-        val vdir = java.nio.file.Files
-          .createTempDirectory("graft_doctor_maint_vec").toString
+        val vdir = s"$dir/vec"
         val vecs = Seq(
           (0L, Array(0f, 0f)), (1L, Array(0f, 0f)), (2L, Array(0f, 0f)),
           (3L, Array(14f, 0f)), (4L, Array(13f, 0f)), (5L, Array(12f, 0f)))
@@ -330,17 +308,9 @@ object StoreQueries {
           lexTable = Some("doctor_maint_lex"), vecPath = Some(vdir))
         val app = g.doctorRun(opts,
           lexTable = Some("doctor_maint_lex"), vecPath = Some(vdir))
-        val out = dry.toDF(s).withColumn("run", lit("dry"))
+        dry.toDF(s).withColumn("run", lit("dry"))
           .unionByName(app.toDF(s).withColumn("run", lit("apply")))
           .orderBy(col("run"), col("ord"))
-          .localCheckpoint() // detach from the temp store + warehouse table
-        s.sql("DROP TABLE IF EXISTS doctor_maint_lex")
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(new java.io.File(dir)); rm(new java.io.File(vdir))
-        out
       },
       """SELECT CAST(ord AS BIGINT) AS ord, row_type, phase, name, required,
         |  reason, CAST(detail_n AS BIGINT) AS detail_n, executed, run
@@ -390,14 +360,13 @@ object StoreQueries {
     // the post-mutation texts, so a stale-pin bug (serving the copy after
     // the log moved) fails the hash on the v2 rows. ----
     "store_snapshot_pin" -> QueryDef.sql(
-      (s, d) => {
+      (s, d) => Scratch(s, "graft_pin_gate") { dir =>
         val docs = Tables.documents(s, d).filter(col("doc_id") < 30)
           .select(col("doc_id"), col("text")).orderBy(col("doc_id")).collect()
           .map(r => (s"mv2://pin/${r.getLong(0)}", r.getString(1))).toSeq
-        val tmp = java.nio.file.Files.createTempDirectory("graft_pin_gate")
-        val store = new FrameStore(s, tmp.resolve("frames").toString)
+        val store = new FrameStore(s, s"$dir/frames")
         val ids = store.put(docs, chunkLargeDocs = false)
-        store.snapshotCurrent(tmp.resolve("snap").toString)
+        store.snapshotCurrent(s"$dir/snap")
         val pinnedCount = store.latestActive.count() // served from the pin
         store.updateMany(docs.take(3).zip(ids.take(3))
           .map { case ((u, t), oldId) => (oldId, t + " v2", u) }) // drops pin
@@ -406,7 +375,6 @@ object StoreQueries {
             octet_length(col("text")).cast("long").as("n_chars_stored"))
           .withColumn("pinned_count", lit(pinnedCount))
           .orderBy(col("uri"))
-          .localCheckpoint() // detach from the temp store
       },
       """SELECT 'mv2://pin/' || doc_id AS uri,
         |  CAST(strlen(text) + CASE WHEN doc_id < 3 THEN 3 ELSE 0 END
@@ -427,10 +395,8 @@ object StoreQueries {
     // card_idx also locks the RULE ORDER (location fires before name in
     // Enrich.defaultRules). ----
     "store_repair_cards" -> QueryDef.sql(
-      (s, d) => {
+      (s, d) => Scratch(s, "graft_repair_gate") { dir =>
         import s.implicits._
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_repair_gate").toString
         val g = new graft.api.Graft(s, dir)
         // one batch append (ids come back in order); rebuild-from-log
         // doesn't read the put-time cards, so skipping their minting
@@ -458,7 +424,6 @@ object StoreQueries {
             col("entity"), col("slot"), col("value"))
           .withColumn("n_cards_total", lit(total))
           .orderBy(col("uri"), col("card_idx"))
-          .localCheckpoint() // detach from the temp store
       },
       """SELECT uri, CAST(card_idx AS BIGINT) AS card_idx, entity, slot,
         |       value, CAST(3 AS BIGINT) AS n_cards_total
@@ -489,12 +454,10 @@ object StoreQueries {
     // contender timeout with owner hint, and stale takeover; this gate
     // locks the cross-handle VALUE semantics against the oracle. ----
     "store_lock_discipline" -> QueryDef.sql(
-      (s, d) => {
+      (s, d) => Scratch(s, "graft_lock_gate") { dir =>
         val docs = Tables.documents(s, d).filter(col("doc_id") < 40)
           .select(col("doc_id"), col("text")).orderBy(col("doc_id")).collect()
           .map(r => (s"mv2://lock/${r.getLong(0)}", r.getString(1))).toSeq
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_lock_gate").toString
         val a = new FrameStore(s, dir)
         val idsA = a.put(docs.take(20), chunkLargeDocs = false)
         val b = new FrameStore(s, dir) // separate handle, separate cache
@@ -513,7 +476,6 @@ object StoreQueries {
           .withColumn("n_distinct_ids", lit(acct.getLong(1)))
           .withColumn("n_commits", lit(acct.getLong(2)))
           .orderBy(col("uri"))
-          .localCheckpoint() // detach from the temp store
       },
       """SELECT 'mv2://lock/' || doc_id AS uri,
         |  CASE WHEN doc_id = 0 THEN text || ' v2' ELSE text END AS text,
@@ -524,12 +486,10 @@ object StoreQueries {
         |ORDER BY uri""".stripMargin),
 
     "store_vacuum_compact" -> QueryDef.sql(
-      (s, d) => {
+      (s, d) => Scratch(s, "graft_vacuum_gate") { dir =>
         val docs = Tables.documents(s, d).filter(col("doc_id") < 40)
           .select(col("doc_id"), col("text")).orderBy(col("doc_id")).collect()
           .map(r => (s"mv2://vac/${r.getLong(0)}", r.getString(1))).toSeq
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_vacuum_gate").toString
         val store = new FrameStore(s, dir)
         val ids = store.put(docs, chunkLargeDocs = false)
         store.updateMany(docs.take(5).zip(ids.take(5))
@@ -544,7 +504,6 @@ object StoreQueries {
           .withColumn("log_rows_before", lit(before))
           .withColumn("log_rows_after", lit(after))
           .orderBy(col("uri"))
-          .localCheckpoint() // detach from the temp store
       },
       """SELECT 'mv2://vac/' || doc_id AS uri,
         |  CAST(strlen(text) + CASE WHEN doc_id < 5 THEN 3 ELSE 0 END
@@ -562,12 +521,10 @@ object StoreQueries {
     // The oracle rebuilds every metric from the fixture's construction
     // (60 puts + 5 supersedes + 5 tombstones). ----
     "store_stats_report" -> QueryDef.sql(
-      (s, d) => {
+      (s, d) => Scratch(s, "graft_store_stats") { dir =>
         val docs = Tables.documents(s, d).filter(col("doc_id") < 60)
           .select(col("doc_id"), col("text")).orderBy(col("doc_id")).collect()
           .map(r => (s"mv2://stats/${r.getLong(0)}", r.getString(1))).toSeq
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_store_stats").toString
         val store = new FrameStore(s, dir)
         // chunkLargeDocs=false: the oracle counts exactly one frame per
         // document; do not depend on every fixture text staying <1200
@@ -576,7 +533,7 @@ object StoreQueries {
         store.updateMany(docs.take(5).zip(ids.take(5))
           .map { case ((u, t), oldId) => (oldId, t + " v2", u) })
         store.deleteMany((40 to 44).map(ids(_)))
-        graft.store.StoreStats.report(store).localCheckpoint()
+        graft.store.StoreStats.report(store)
       },
       """WITH base AS MATERIALIZED (
         |  SELECT doc_id, text FROM documents WHERE doc_id < 60),

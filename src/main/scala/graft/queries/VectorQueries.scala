@@ -83,11 +83,6 @@ object VectorQueries {
     }
 
 
-  private[queries] def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
-  }
-
   /** DuckDB fold fragments mirroring VectorKernels */
   private def duckDot(a: String, b: String) =
     s"list_reduce(list_prepend(0.0, list_transform(list_zip($a, $b), p -> p[1]*p[2])), (x,y)->x+y)"
@@ -355,21 +350,14 @@ object VectorQueries {
     // PlanPropertiesSpec). Same fixture and oracle as vec_ivf_search —
     // persistence must not change a single bit of the answer. ----
     "vec_ivf_persisted" -> QueryDef.sql(
-      (s, d) => {
+      (s, d) => Scratch(s, "graft_ivf_idx") { dir =>
         F.ensureRegistered(s)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_ivf_idx").toString
         val idx = graft.vector.IvfIndex.write(
           Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
           "vec_id", "embedding", dir, ivfCents(s, d))
-        val out = idx.search("vec_id", "embedding", queryVec(s, d, 5L),
+        idx.search("vec_id", "embedding", queryVec(s, d, 5L),
             k = 15, nprobe = 2)
           .withColumn("score", round(col("score"), 6))
-          .localCheckpoint() // detach from the temp dir
-        // result is detached — remove the artifact so repeated bench/soak
-        // runs don't accumulate temp parquet directories
-        deleteRecursively(new java.io.File(dir))
-        out
       },
       ivfSearchOracle),
 
@@ -386,21 +374,16 @@ object VectorQueries {
     // a lost delta vector, a kernel drift, or a partition misroute
     // hash-fails. ----
     "vec_ivf_append" -> QueryDef.sql(
-      (s, d) => {
+      (s, d) => Scratch(s, "graft_ivf_append") { dir =>
         F.ensureRegistered(s)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_ivf_append").toString
         val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
         graft.vector.IvfIndex.write(emb.filter(col("vec_id") % 10 =!= 0),
           "vec_id", "embedding", dir, ivfCents(s, d))
         val idx = graft.vector.IvfIndex.append(s, dir,
           emb.filter(col("vec_id") % 10 === 0), "vec_id", "embedding")
-        val out = idx.search("vec_id", "embedding", queryVec(s, d, 5L),
+        idx.search("vec_id", "embedding", queryVec(s, d, 5L),
             k = 15, nprobe = 2)
           .withColumn("score", round(col("score"), 6))
-          .localCheckpoint() // detach from the temp dir
-        deleteRecursively(new java.io.File(dir))
-        out
       },
       ivfSearchOracle),
 
@@ -417,12 +400,11 @@ object VectorQueries {
     // vec_ivf_search): a lost batch, a double-appended replay, or a
     // codebook/kernel drift all hash-fail. ----
     "stream_vec_append" -> QueryDef.sql(
-      (s, d) => {
+      (s, d) => Scratch(s, "graft-st-vec") { dir =>
         F.ensureRegistered(s)
-        val tmp = java.nio.file.Files.createTempDirectory("graft-st-vec")
-        val in = tmp.resolve("in").toString
-        val idxDir = tmp.resolve("idx").toString
-        val ck = tmp.resolve("ck").toString
+        val in = s"$dir/in"
+        val idxDir = s"$dir/idx"
+        val ck = s"$dir/ck"
         val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
         graft.vector.IvfIndex.write(emb.filter(col("vec_id") % 10 =!= 0),
           "vec_id", "embedding", idxDir, ivfCents(s, d))
@@ -434,16 +416,12 @@ object VectorQueries {
         val q = graft.streaming.StreamingIngest.runVecIndexStream(
           s, in, idxDir, ck, "vec_id", "embedding", emb.schema)
         q.awaitTermination()
-        val nBatches = Option(new java.io.File(s"$ck/offsets").list())
-          .map(_.count(f => !f.endsWith(".tmp") && !f.startsWith("."))).getOrElse(0)
+        val nBatches = Scratch.offsetBatches(s, ck)
         val idx = graft.vector.IvfIndex.read(s, idxDir)
-        val out = idx.search("vec_id", "embedding", queryVec(s, d, 5L),
+        idx.search("vec_id", "embedding", queryVec(s, d, 5L),
             k = 15, nprobe = 2)
           .withColumn("score", round(col("score"), 6))
           .withColumn("multi_batch", lit(nBatches >= 3))
-          .localCheckpoint() // detach from the temp dirs
-        deleteRecursively(tmp.toFile)
-        out
       },
       ivfSearchOracleCols(", TRUE AS multi_batch")),
 
@@ -461,11 +439,9 @@ object VectorQueries {
     // replays assign → means → re-assign with the vec_kmeans_lloyd CTE
     // chain seeded by the IVF assignment. ----
     "vec_ivf_retrain" -> QueryDef.sql(
-      (s, d) => {
+      (s, d) => Scratch(s, "graft_ivf_retrain") { dir =>
         import s.implicits._
         F.ensureRegistered(s)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_ivf_retrain").toString
         val idx = graft.vector.IvfIndex.write(
           Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
           "vec_id", "embedding", dir, ivfCents(s, d))
@@ -484,16 +460,13 @@ object VectorQueries {
             math.BigDecimal(l2)
               .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
         }
-        val out = s.createDataFrame(shifts)
+        s.createDataFrame(shifts)
           .toDF("cluster", "n_before", "shift_l2")
           .join(idx2.assigned.groupBy(col("cluster"))
             .agg(count(lit(1)).as("n_after")), Seq("cluster"), "left")
           .select(col("cluster"), col("n_before"),
             coalesce(col("n_after"), lit(0L)).as("n_after"), col("shift_l2"))
           .orderBy(col("cluster"))
-          .localCheckpoint() // detach from the temp dir before deleting it
-        deleteRecursively(new java.io.File(dir))
-        out
       },
       s"""WITH c0 AS (SELECT CAST(vec_id AS INT) AS cid, $e AS cv
          |  FROM embeddings WHERE vec_id IN (0, 1, 2)),

@@ -138,7 +138,29 @@ object Bm25Index {
             tableName: String, stemmed: Boolean = false,
             nBuckets: Int = 16,
             trackCol: Option[String] = None,
-            withPositions: Boolean = false): Unit = withTableLock(docs.sparkSession, tableName) {
+            withPositions: Boolean = false): Unit =
+    writeLayout(docs, idCol, textCol, tableName, stemmed, nBuckets, trackCol,
+      withPositions, bucketsPerTrack = false)
+
+  /** [[write]] over `docs` in the live table's own layout: its bucket
+    * count (per track, for a tracked table — not re-divided), track
+    * partitioning and positions. A tracked table's `docs` carry `track`.
+    * A missing table builds untracked with 16 buckets. */
+  def rebuild(docs: DataFrame, idCol: String, textCol: String,
+              tableName: String, stemmed: Boolean): Unit = {
+    val spark = docs.sparkSession
+    writeLayout(docs, idCol, textCol, tableName, stemmed,
+      catalogBuckets(spark, tableName).getOrElse(16),
+      Option.when(isTracked(spark, tableName))("track"),
+      withPositions = false, bucketsPerTrack = true)
+  }
+
+  /** @param bucketsPerTrack `nBuckets` is already the per-track count
+    *        (a rebuild keeping its table's spec), not a total budget */
+  private def writeLayout(docs: DataFrame, idCol: String, textCol: String,
+            tableName: String, stemmed: Boolean, nBuckets: Int,
+            trackCol: Option[String], withPositions: Boolean,
+            bucketsPerTrack: Boolean): Unit = withTableLock(docs.sparkSession, tableName) {
     val spark = docs.sparkSession
     // rebuilding an existing POSITIONED table keeps the layout even when
     // the flag is omitted (the doctor's heal path rebuilds by table name
@@ -159,9 +181,8 @@ object Bm25Index {
     val (postings, effBuckets) = trackCol match {
       case Some(tc) =>
         import org.apache.spark.sql.functions.col
-        val nTracks = math.max(1L,
-          docs.select(col(tc)).distinct().count())
-        val nb = math.max(1, (nBuckets.toLong / nTracks).toInt)
+        val nb = if (bucketsPerTrack) nBuckets else math.max(1,
+          (nBuckets.toLong / math.max(1L, docs.select(col(tc)).distinct().count())).toInt)
         (postings0.repartition(nb, col("doc_id")), nb)
       case None => (postings0, nBuckets)
     }
@@ -361,7 +382,7 @@ object Bm25Index {
     val loc = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(tableName)).location
     val p = new org.apache.hadoop.fs.Path(loc)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.store.Fs.of(spark, loc.toString)
     def walk(dir: org.apache.hadoop.fs.Path): Long =
       fs.listStatus(dir).map { st =>
         val n = st.getPath.getName

@@ -49,9 +49,9 @@ final class FrameStore(spark: SparkSession, path: String,
                          FrameStore.defaultLockOptions) {
   import spark.implicits._
 
-  private def logExists: Boolean =
-    new java.io.File(path).exists && new java.io.File(path).list() != null &&
-      new java.io.File(path).list().exists(!_.startsWith("_"))
+  /** one FS probe: under the explicit [[log]] schema a dir holding only
+    * `_graft_seq` reads as 0 rows, so existence is the whole test */
+  private def logExists: Boolean = Fs.exists(spark, path)
 
   def log: Dataset[Frame] =
     // explicit schema: the log is only ever written from Dataset[Frame],
@@ -65,7 +65,7 @@ final class FrameStore(spark: SparkSession, path: String,
   // ---- minted-watermark persistence (multi-writer id safety) ----
   private def seqFile = new org.apache.hadoop.fs.Path(
     path.stripSuffix("/") + "/_graft_seq")
-  private def fs = seqFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def fs = Fs.of(spark, path)
 
   /** (maxId, maxSeq, lastVacuumSeq) — the third field records the commit
     * watermark AT THE TIME of the most recent [[vacuum]] (0 = never, and
@@ -575,9 +575,8 @@ final class FrameStore(spark: SparkSession, path: String,
     currentSnapshot = None
     val fsPath = new org.apache.hadoop.fs.Path(path)
     val fsTmp = new org.apache.hadoop.fs.Path(tmp)
-    val hfs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    hfs.delete(fsPath, true)
-    if (!hfs.rename(fsTmp, fsPath))
+    fs.delete(fsPath, true)
+    if (!fs.rename(fsTmp, fsPath))
       throw new java.io.IOException(s"vacuum: rename $tmp -> $path failed")
     counters = Some((watermark._1, watermark._2, watermark._2))
     // vacuum purges dead Active rows without moving the commit watermark

@@ -60,7 +60,7 @@ object StreamingIngest {
     F.ensureRegistered(spark)
     val frames = spark.read.parquet(framesDir)
     val done: DataFrame =
-      if (new java.io.File(logDir).exists) spark.read.parquet(logDir)
+      if (graft.store.Fs.exists(spark, logDir)) spark.read.parquet(logDir)
       else spark.emptyDataFrame.withColumn("uri", lit(""))
     val todo = if (done.columns.contains("uri"))
       frames.join(done.select("uri"), Seq("uri"), "left_anti") else frames
@@ -127,12 +127,9 @@ object StreamingIngest {
     * — a few-MB fixture drains through 1 store instead of 8, a TB-scale
     * directory still fans out to the full session width. Values are
     * unaffected: the drains' aggregates/joins are partitioning-free. */
-  private def drainPartitions(spark: SparkSession, dir: String, glob: String): Int = {
-    val f = new java.io.File(s"$dir/$glob")
-    val bytes =
-      if (f.isDirectory)
-        Option(f.listFiles).map(_.filter(_.isFile).map(_.length).sum).getOrElse(0L)
-      else f.length
+  private[graft] def drainPartitions(spark: SparkSession, dir: String,
+                                     glob: String): Int = {
+    val bytes = graft.store.Fs.bytes(spark, s"$dir/$glob")
     val per = spark.conf.getOption("spark.graft.stream.bytesPerStatePartition")
       .map(_.toLong).getOrElse(64L << 20)
     val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt

@@ -443,6 +443,64 @@ class FacadeIndexSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS `facade_foreign_spec`")
   }
 
+  test("a FOREIGN lex refresh restamps the index: the stale handle serves indexed again, no commit in between") {
+    val dir = tmpStore()
+    val tbl = "facade_foreign_refresh_spec"
+    spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
+    try {
+      val g = new Graft(spark, dir)
+      texts.zipWithIndex.foreach { case (t, i) => g.put(s"mv2://t/$i", t) }
+      g.buildLexIndex(tbl, stemmed = false)
+      val other = new Graft(spark, dir)
+      other.put("mv2://t/foreign", "spark joins from a foreign writer")
+      g.search("spark joins", topK = 10)
+      assert(g.lastSearchRoute == "corpus") // stale verdict cached
+      other.attachLexIndex(tbl, stemmed = false)
+      assert(other.refreshLexIndex() == "appended")
+      val served = g.search("spark joins", topK = 10)
+      assert(g.lastSearchRoute == "indexed",
+        "a foreign restamp must be seen without a commit")
+      val corpus = Search.search(g.frames.latestActive, "id",
+        FrameCols(text = coalesce(col("text"), lit("")), uri = col("uri"),
+          track = col("track"), kind = col("kind"), tags = col("tags"),
+          labels = col("labels"), timestamp = col("timestamp")),
+        "spark joins", Search.Options(topK = 10, engine = Search.BM25Engine,
+          stemmed = false))
+      assert(rows(served) == rows(corpus) && rows(served).nonEmpty)
+    } finally spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
+  }
+
+  test("a tracked lex rebuild keeps its bucket count on every rebuild") {
+    val g = new Graft(spark, tmpStore())
+    val ids = (0 until 8).map { i =>
+      g.put(s"mv2://t/$i", texts(i % texts.size) + s" doc$i",
+        track = Some(if (i % 2 == 0) "even" else "odd")).get
+    }
+    val tbl = "facade_tracked_rebuild_spec"
+    spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
+    try {
+      g.buildLexIndex(tbl, stemmed = false, partitionByTrack = true)
+      def buckets = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(tbl)).bucketSpec.get.numBuckets
+      assert(buckets == 8) // 16 split over two tracks
+      val fcols = FrameCols(text = coalesce(col("text"), lit("")),
+        uri = col("uri"), track = col("track"), kind = col("kind"),
+        tags = col("tags"), labels = col("labels"), timestamp = col("timestamp"))
+      Seq(ids(0), ids(1), ids(2)).foreach { id =>
+        g.delete(id)
+        assert(g.refreshLexIndex() == "rebuilt")
+        assert(buckets == 8)
+        Seq("spark joins", "track:odd AND spark").foreach { q =>
+          val served = g.search(q, topK = 10)
+          assert(g.lastSearchRoute == "indexed")
+          assert(rows(served) == rows(Search.search(g.frames.latestActive, "id",
+            fcols, q, Search.Options(topK = 10, engine = Search.BM25Engine,
+              stemmed = false))), q)
+        }
+      }
+    } finally spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
+  }
+
   test("doctor heals a stale vec serving stamp with the incremental refresh") {
     val g = freshStore()
     val dir = tmpStore()

@@ -187,6 +187,24 @@ class VectorSpec extends SparkSpec {
     }
   }
 
+  test("pq_encode / pq_adist reject a non-literal or mistyped second argument at analysis") {
+    graft.functions.F.ensureRegistered(spark)
+    Seq((Seq(1f, 2f), Seq(Seq(Seq(1f, 2f))), Seq(0), Seq(Seq(1.0))))
+      .toDF("v", "cb", "codes", "tbl").createOrReplaceTempView("pq_args_spec")
+    Seq("SELECT pq_encode(v, cb) FROM pq_args_spec" -> "pq_encode",
+        "SELECT pq_encode(v, array(1.0D)) FROM pq_args_spec" -> "pq_encode",
+        "SELECT pq_adist(codes, tbl) FROM pq_args_spec" -> "pq_adist",
+        "SELECT pq_adist(codes, array(array(1.0F))) FROM pq_args_spec" -> "pq_adist")
+      .foreach { case (q, fn) =>
+        val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(q))
+        assert(e.getMessage.contains(fn), e.getMessage)
+      }
+    // the literal forms the quantizer emits still analyze and run
+    assert(spark.sql("SELECT pq_adist(codes, array(array(1.0D))) AS d FROM pq_args_spec")
+      .head.getDouble(0) == 1.0)
+    spark.catalog.dropTempView("pq_args_spec")
+  }
+
   test("adaptive cutoff strategies on a crafted score ladder") {
     // FIXTURES.md §3: [0.9, 0.88, 0.85, 0.4, 0.39] -> cliff cut at index 3
     val ranked = Seq((1L, 0.9), (2L, 0.88), (3L, 0.85), (4L, 0.4), (5L, 0.39))

@@ -142,14 +142,13 @@ class LiveSketchSpec extends SparkSpec {
     assert(g.lastSearchRoute == "indexed")
     assert(!g.lastSketchApplied, "the old live sketch must not serve a moved watermark")
     assert(page(stale).map(_._1).contains(newId))
-    // the foreign sketch refresh does not move the watermark, so this
-    // handle keeps its stale verdict until its own refresh finds the
-    // table current ("fresh") and drops it; the filter then re-arms with
-    // the new row
+    // the foreign sketch refresh does not move the watermark, but it
+    // restamps the table: this handle's stale verdict re-reads the stamp
+    // and the filter re-arms with the new row, no commit in between
     other.attachSketchTable(skt)
     assert(other.refreshSketchTable() == "appended")
     g.search("spark join", topK = 50)
-    assert(!g.lastSketchApplied)
+    assert(g.lastSketchApplied)
     assert(g.refreshSketchTable() == "fresh")
     val fresh = g.search("spark join", topK = 50)
     assert(g.lastSketchApplied)
