@@ -189,19 +189,32 @@ object Doctor {
            vecCol: String = "embedding"): Report =
     planWithProbe(g, opts, lexTable, vecPath, vecIdCol, vecCol)._1
 
+  /** What a probe reads that another handle or process can change: the
+    * commit watermark, every attached serving artifact's stamp, and the
+    * committed state of each IVF dir in play (live generation, its
+    * marker nonce, its committed deltas). A foreign refresh or compaction
+    * changes an artifact without moving the watermark. */
+  private def probeKey(g: Graft, vecPath: Option[String]): Seq[Any] = {
+    val attached = g.attachedArtifacts
+    val vecPaths = (vecPath.toSeq ++ attached.collect {
+      case v: ServingArtifact.IvfDir => v.path
+    }).distinct.filter(graft.vector.IvfIndex.exists(g.spark, _))
+    (g.frames.persistedWatermark +: attached.map(_.stamp())) ++
+      vecPaths.map(graft.vector.IvfIndex.version(g.spark, _))
+  }
+
   /** [[plan]] that also returns the probe counters it planned from plus
-    * the store watermark read BEFORE the probe — [[run]] reuses them for
+    * the [[probeKey]] read BEFORE the probe — [[run]] reuses them for
     * the dry-run post-verify (r20, guide §1.2): dry_run executes
-    * NOTHING, so when the commit watermark has not moved the verify
-    * counters are definitionally the plan counters and the second union
-    * job is pure duplication. Any foreign commit moves the watermark
-    * and forces the fresh re-probe. */
-  private def planWithProbe(g: Graft, opts: DoctorOptions,
-                            lexTable: Option[String],
-                            vecPath: Option[String],
-                            vecIdCol: String,
-                            vecCol: String): (Report, Map[String, Long], Long) = {
-    val wm = g.frames.persistedWatermark
+    * NOTHING, so when the key has not moved the verify counters are
+    * definitionally the plan counters and the second union job is pure
+    * duplication. */
+  private[api] def planWithProbe(g: Graft, opts: DoctorOptions,
+                                 lexTable: Option[String],
+                                 vecPath: Option[String],
+                                 vecIdCol: String,
+                                 vecCol: String): (Report, Map[String, Long], Seq[Any]) = {
+    val key = probeKey(g, vecPath)
     val p = probe(g, opts, lexTable, vecPath, vecIdCol, vecCol)
     var ord = 0L
     def row(rowType: String, phase: String, name: String, required: Boolean,
@@ -299,7 +312,7 @@ object Doctor {
         Seq(row("action", "finalize", "refresh_snapshot", required = true, "", 0L))
       else Nil
     val verify = Seq(row("action", "verify", "deep_verify", required = true, "", 0L))
-    (Report(findings ++ vacuumActions ++ rebuildActions ++ finalize ++ verify), p, wm)
+    (Report(findings ++ vacuumActions ++ rebuildActions ++ finalize ++ verify), p, key)
   }
 
   /** Plan, then execute unless dry_run — doctor_run (doctor.rs:162-173).
@@ -311,9 +324,17 @@ object Doctor {
           vecPath: Option[String] = None,
           lexStemmed: Boolean = false,
           vecIdCol: String = "vec_id",
-          vecCol: String = "embedding"): Report = {
-    val (planned, preProbe, preWm) =
-      planWithProbe(g, opts, lexTable, vecPath, vecIdCol, vecCol)
+          vecCol: String = "embedding"): Report =
+    runPlanned(g, opts, planWithProbe(g, opts, lexTable, vecPath, vecIdCol, vecCol),
+      lexTable, vecPath, lexStemmed, vecIdCol, vecCol)
+
+  /** [[run]] from a [[planWithProbe]] result */
+  private[api] def runPlanned(g: Graft, opts: DoctorOptions,
+                              plan: (Report, Map[String, Long], Seq[Any]),
+                              lexTable: Option[String], vecPath: Option[String],
+                              lexStemmed: Boolean, vecIdCol: String,
+                              vecCol: String): Report = {
+    val (planned, preProbe, preKey) = plan
     val executed = planned.rows.map { r =>
       if (r.rowType != "action" || opts.dryRun) r
       else {
@@ -392,11 +413,11 @@ object Doctor {
         r.copy(executed = true)
       }
     }
-    // dry_run executed nothing: when no foreign writer moved the commit
-    // watermark, the verify counters ARE the plan counters — reuse them
-    // instead of paying a second identical probe union job (r20 §1.2)
+    // dry_run executed nothing: when no foreign writer moved the probe
+    // key, the verify counters ARE the plan counters — reuse them instead
+    // of paying a second identical probe union job (r20 §1.2)
     val post =
-      if (opts.dryRun && g.frames.persistedWatermark == preWm) preProbe
+      if (opts.dryRun && probeKey(g, vecPath) == preKey) preProbe
       else probe(g, opts, lexTable, vecPath, vecIdCol, vecCol)
     val base = executed.map(_.ord).max
     val postRows = post.toSeq.sortBy(_._1).zipWithIndex.map { case ((k, v), i) =>

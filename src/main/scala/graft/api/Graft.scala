@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import graft.ask.{Ask, Embedder}
 import graft.memory.MemoryCards
 import graft.search.{FrameCols, Search, SketchFilter}
-import graft.store.{FrameStore, Fs}
+import graft.store.{FrameStore, Fs, Generations}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -115,7 +115,7 @@ final class Graft(val spark: SparkSession, basePath: String,
       }
       rows.toDF("cardId", "entity", "slot", "value", "kind", "relation", "ts", "sourceFrameId")
         .coalesce(1) // one file per driver-resident card batch (r20 §6)
-        .write.mode(SaveMode.Append).parquet(cardsPath)
+        .write.mode(SaveMode.Append).parquet(cardsDir)
     }
     facts.map(f => (f.entity, f.slot)).toSet
   }
@@ -138,7 +138,7 @@ final class Graft(val spark: SparkSession, basePath: String,
       }
       rows.toDF("cardId", "entity", "slot", "value", "kind", "relation", "ts", "sourceFrameId")
         .coalesce(1) // one file per driver-resident card batch (r20 §6)
-        .write.mode(SaveMode.Append).parquet(cardsPath)
+        .write.mode(SaveMode.Append).parquet(cardsDir)
     }
   }
 
@@ -243,7 +243,10 @@ final class Graft(val spark: SparkSession, basePath: String,
     * cached serving verdict/handle so the next query reopens the current
     * artifact instead of a deleted generation */
   private[api] def invalidateIndexCaches(): Unit =
-    Seq(lex, vec, sketch).flatten.foreach(_.served = None)
+    attachedArtifacts.foreach(_.served = None)
+
+  private[api] def attachedArtifacts: Seq[ServingArtifact[_]] =
+    Seq(lex, vec, sketch).flatten
 
   /** Build (or rebuild) the sketch table over the CURRENT live frames
     * (documents AND chunks — the same population search() ranks), stamp
@@ -686,21 +689,16 @@ final class Graft(val spark: SparkSession, basePath: String,
   }
 
   // ---- structured memory ----
+  /** the cards table's live dir: the generation [[repairCards]] last
+    * swapped in, else `cardsPath` itself ([[graft.store.Generations]]) */
+  private def cardsDir: String = Generations.live(spark, cardsPath)
+
   def cards: DataFrame = {
-    // a missing table with a .__rebuild/.__old sibling is a crashed
-    // repairCards swap — recover the orphan instead of serving empty
-    // (ADVICE r19); no-cost for healthy stores (guarded on absence)
-    val hfs = Fs.of(spark, cardsPath)
-    val dst = new org.apache.hadoop.fs.Path(cardsPath)
-    if (!hfs.exists(dst))
-      Seq(s"$cardsPath.__rebuild", s"$cardsPath.__old").foreach { cand =>
-        val p = new org.apache.hadoop.fs.Path(cand)
-        if (!hfs.exists(dst) && hfs.exists(p)) hfs.rename(p, dst): Unit
-      }
+    val dir = cardsDir
     // explicit schema (the table is only ever written with this shape):
     // skips the 1-task footer-inference job per open (r19)
-    if (hfs.exists(dst))
-      spark.read.schema(Graft.cardsSchema).parquet(cardsPath)
+    if (Fs.exists(spark, dir))
+      spark.read.schema(Graft.cardsSchema).parquet(dir)
     else Seq.empty[(Long, String, String, String, String, String, Timestamp, Long)]
       .toDF("cardId", "entity", "slot", "value", "kind", "relation", "ts", "sourceFrameId")
   }
@@ -711,7 +709,7 @@ final class Graft(val spark: SparkSession, basePath: String,
          entity, slot, value, "fact", relation, ts, -1L))
       .toDF("cardId", "entity", "slot", "value", "kind", "relation", "ts", "sourceFrameId")
       .coalesce(1) // one file per driver-resident card batch (r20 §6)
-      .write.mode(SaveMode.Append).parquet(cardsPath)
+      .write.mode(SaveMode.Append).parquet(cardsDir)
 
   def getCurrent(entity: String, slot: String): Option[String] =
     MemoryCards.getCurrent(cards)
@@ -835,32 +833,13 @@ final class Graft(val spark: SparkSession, basePath: String,
         col("__fact._3").as("value"), lit("fact").as("kind"),
         lit("sets").as("relation"), col("timestamp").as("ts"),
         col("id").as("sourceFrameId"))
-    // rewrite via temp dir: the rebuild reads the same store it replaces.
-    // The swap is an FS rename (the vacuum() pattern) — the former
-    // read-tmp-and-rewrite was a second full pass over the rebuilt table
-    // for no value (guide §1.2: don't compute things you throw away).
-    val tmp = s"$cardsPath.__rebuild"
-    rebuilt.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val n = spark.read.parquet(tmp).count()
-    val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-    val dstPath = new org.apache.hadoop.fs.Path(cardsPath)
-    val oldPath = new org.apache.hadoop.fs.Path(s"$cardsPath.__old")
-    val hfs = Fs.of(spark, tmp)
-    // rename-rename-delete (ADVICE r19): the former delete(dst)+rename
-    // left NO cards dir if crashed between the two — cards() then
-    // silently served empty. Now the old table is renamed ASIDE first,
-    // and [[cards]] recovers an orphan .__rebuild/.__old if a crash
-    // lands between the renames.
-    hfs.delete(oldPath, true) // clear residue from a prior crashed swap
-    if (hfs.exists(dstPath) && !hfs.rename(dstPath, oldPath))
-      throw new java.io.IOException(
-        s"repairCards: rename $cardsPath -> $oldPath failed")
-    if (!hfs.rename(tmpPath, dstPath)) {
-      if (hfs.exists(oldPath)) hfs.rename(oldPath, dstPath): Unit // restore
-      throw new java.io.IOException(s"repairCards: rename $tmp -> $cardsPath failed")
-    }
-    hfs.delete(oldPath, true)
-    n
+    // the rebuild lands as the table's next generation and the pointer
+    // swap publishes it: a crash leaves the old table or the new one,
+    // and a reader of the old one keeps its files until the next rebuild
+    val next = Generations.number(cardsPath, cardsDir) + 1
+    val dir = Generations.write(spark, cardsPath, next)(rebuilt.write.parquet(_))
+    Generations.swap(spark, cardsPath, next)
+    spark.read.schema(Graft.cardsSchema).parquet(dir).count()
   }
 
   // ---- training-data pipeline ops over the live corpus ----

@@ -69,6 +69,11 @@ object Ask {
                             classification: Map[String, Boolean],
                             sources: Seq[String] = Seq.empty)
 
+  /** the Spark local properties a caller's jobs carry that the candidate
+    * legs' pooled threads must carry too */
+  private val CallerProps = Seq("spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel", "spark.job.tags", "spark.scheduler.pool")
+
   def ask(spark: SparkSession, corpus: Corpus, question: String,
           embedder: Option[Embedder] = None, topK: Int = 5,
           acl: Option[graft.acl.Acl.Check] = None): Response = {
@@ -186,10 +191,21 @@ object Ask {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val primaryF = Future(lexList(primaryQ).filter(_.nonEmpty))
-    val orListF = Future(lexList(Classify.disjunctive(question)))
+    // pooled threads do not inherit the caller's Spark local properties:
+    // each leg sets the caller's job group, description, tags and pool
+    // for its own jobs, and puts the pooled thread's back after
+    val sc = spark.sparkContext
+    def props() = CallerProps.map(k => k -> sc.getLocalProperty(k))
+    val caller = props()
+    def leg[T](body: => T): Future[T] = Future {
+      val pooled = props()
+      caller.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      try body finally pooled.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    }
+    val primaryF = leg(lexList(primaryQ).filter(_.nonEmpty))
+    val orListF = leg(lexList(Classify.disjunctive(question)))
 
-    val vectorListF = Future((corpus.ann, embedder) match {
+    val vectorListF = leg((corpus.ann, embedder) match {
       // indexed path: candidates from the attached ANN search (same
       // bounded top-k' contract; the fn owns metric + pruning)
       case (Some(annFn), Some(e)) =>
@@ -207,7 +223,7 @@ object Ask {
       }
     })
 
-    val correctionsF = Future {
+    val correctionsF = leg {
       val pred = f.uri.startsWith(corpus.correctionUriPrefix) &&
         terms.map(t => lower(f.text).contains(t)).reduceOption(_ || _).getOrElse(lit(false))
       // bounded like the reference's correction search (ask.rs:278-297 runs

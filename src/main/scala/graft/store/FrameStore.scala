@@ -37,6 +37,10 @@ import org.apache.spark.sql.functions._
   * [[liveState]]). A pinned [[snapshotCurrent]] copy is the exception:
   * only this handle's own mutations unpin it.
   *
+  * Layout: the log's files live in the store dir until the first
+  * [[vacuum]], then in the generation `CURRENT` names ([[Generations]]);
+  * `_graft_seq` stays in the store dir, which is never deleted.
+  *
   * The last put commit this handle wrote is held too: its frames' narrow
   * serving rows (id, role, track, text — no payload), keyed on the
   * watermark it read, the one it minted and the mutation epoch after it.
@@ -53,14 +57,29 @@ final class FrameStore(spark: SparkSession, path: String,
     * `_graft_seq` reads as 0 rows, so existence is the whole test */
   private def logExists: Boolean = Fs.exists(spark, path)
 
+  // a store the pre-generation vacuum left between its delete and its
+  // rename — the store dir gone, the complete compacted copy (its
+  // watermark written last) beside it — becomes the store again
+  if (!logExists && Fs.exists(spark, s"${path}_vacuum/_graft_seq"))
+    mutate(Generations.adopt(spark, path, s"${path}_vacuum"))
+
   def log: Dataset[Frame] =
     // explicit schema: the log is only ever written from Dataset[Frame],
     // so the encoder schema IS the file schema — skipping inference
     // saves a 1-task footer-read job on every open (r19; the log is
     // opened once or more per store verb)
-    if (logExists) spark.read.schema(FrameStore.frameSchema).parquet(path)
+    if (logExists) spark.read.schema(FrameStore.frameSchema).parquet(liveDir)
       .as[Frame]
     else spark.emptyDataset[Frame]
+
+  /** The dir the log's files live in: the generation `CURRENT` names,
+    * else the store dir. Without a pointer, only a store whose
+    * `_graft_seq` records a vacuum lists its dir for a generation a torn
+    * swap left unnamed, so a log never vacuumed is resolved with one
+    * failed open and one small read, no listing. */
+  private[store] def liveDir: String =
+    Generations.pointed(spark, path).getOrElse(
+      if (readSeqFile().forall(_._3 == 0L)) path else Generations.recover(spark, path))
 
   // ---- minted-watermark persistence (multi-writer id safety) ----
   private def seqFile = new org.apache.hadoop.fs.Path(
@@ -103,12 +122,8 @@ final class FrameStore(spark: SparkSession, path: String,
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  private def writeSeqFile(maxId: Long, maxSeq: Long, vacSeq: Long): Unit =
-    writeSeqFileAt(seqFile, maxId, maxSeq, vacSeq)
-
-  private def writeSeqFileAt(at: org.apache.hadoop.fs.Path,
-                             maxId: Long, maxSeq: Long, vacSeq: Long): Unit = {
-    val out = fs.create(at, true)
+  private def writeSeqFile(maxId: Long, maxSeq: Long, vacSeq: Long): Unit = {
+    val out = fs.create(seqFile, true)
     try out.write(s"$maxId\t$maxSeq\t$vacSeq\n".getBytes("UTF-8"))
     finally out.close()
   }
@@ -261,7 +276,7 @@ final class FrameStore(spark: SparkSession, path: String,
     // tiny log files PER COMMIT, which every later log scan re-lists
     // and re-opens. One file per commit is also the reference's WAL
     // segment shape.
-    frames.toDS().coalesce(1).write.mode(SaveMode.Append).parquet(path)
+    frames.toDS().coalesce(1).write.mode(SaveMode.Append).parquet(liveDir)
     // roll the live view forward only when it was current as of the
     // pre-mutation key AND the commit is a put (every appended frame is
     // new, Active and supersedes nothing, so it only adds keys);
@@ -542,46 +557,32 @@ final class FrameStore(spark: SparkSession, path: String,
   /** drop the pinned snapshot; reads recompute from the live log again */
   def releaseSnapshot(): Unit = currentSnapshot = None
 
-  /** compaction: rewrite only the live view, dropping dead versions
-    * (reference vacuum, mutation.rs:2999) */
+  /** Compaction: rewrite only the live view, dropping dead versions
+    * (reference vacuum, mutation.rs:2999), as the next generation:
+    *  1. `_graft_seq` records the vacuum (`lastVacuumSeq` = watermark);
+    *     ids keep minting from the watermark, not the compacted log;
+    *  2. the live view streams into `gen-N+1`, marker last;
+    *  3. the pointer swaps to it.
+    * The seq goes first because torn-swap recovery may adopt the new
+    * generation: no artifact may then classify a delta from a log
+    * compacted past its stamp. A crash before the swap costs artifacts
+    * stamped below the watermark one needless rebuild. */
   def vacuum(): Unit = mutate {
-    // distributed: the live view streams straight to the tmp dir (no
-    // driver collect — the live set is the whole store), then the swap
-    // goes through Hadoop FileSystem so non-local stores (hdfs/s3a)
-    // work the same as file://
-    val tmp = path + "_vacuum"
-    // the minted watermark must SURVIVE compaction: the compacted log's
-    // max id is the max LIVE id, and re-minting a vacuumed-away
-    // (tombstoned/superseded) id would resurrect its history
     val watermark = readSeqFile().orElse(counters).getOrElse {
       val r = log.agg(max("id"), max("commitSeq")).head
       (if (r.isNullAt(0)) 0L else r.getLong(0),
        if (r.isNullAt(1)) 0L else r.getLong(1), 0L)
     }
-    latestActiveAsOf(None).as[Frame].write.mode(SaveMode.Overwrite).parquet(tmp)
-    // the watermark rides INSIDE the tmp dir so the rename carries it
-    // atomically with the compacted log — a crash anywhere in the swap
-    // leaves either the old dir (old _graft_seq intact) or the new one
-    // (watermark already in place); writing it only after the rename
-    // would open a window where the store exists with NO watermark and a
-    // later writer falls back to the compacted log's max LIVE id,
-    // re-minting vacuumed-away ids. The vacuum-tracking field advances to
-    // THIS compaction's watermark in the same atomic swap: derived-state
-    // stamps at exactly the watermark stay append-classifiable (vacuum is
-    // value-neutral for the live view); older stamps must rebuild.
-    writeSeqFileAt(new org.apache.hadoop.fs.Path(
-      tmp.stripSuffix("/") + "/_graft_seq"),
-      watermark._1, watermark._2, watermark._2)
+    writeSeqFile(watermark._1, watermark._2, watermark._2)
+    val next = Generations.number(path, liveDir) + 1
+    Generations.write(spark, path, next)(
+      latestActiveAsOf(None).as[Frame].write.parquet(_))
+    Generations.swap(spark, path, next)
     currentSnapshot = None
-    val fsPath = new org.apache.hadoop.fs.Path(path)
-    val fsTmp = new org.apache.hadoop.fs.Path(tmp)
-    fs.delete(fsPath, true)
-    if (!fs.rename(fsTmp, fsPath))
-      throw new java.io.IOException(s"vacuum: rename $tmp -> $path failed")
     counters = Some((watermark._1, watermark._2, watermark._2))
     // vacuum purges dead Active rows without moving the commit watermark
     // — the dedup-hash population changed, so the cache must re-derive
-    // (lastVacuumSeq, the cache's second key, advanced in the same swap)
+    // (lastVacuumSeq, the cache's second key, advanced in step 1)
     hashCache = None
     liveCache = None
     lastPut = None

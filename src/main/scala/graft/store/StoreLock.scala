@@ -16,9 +16,8 @@ import org.apache.spark.sql.SparkSession
   * "locked by pid … since …" error with a staleness hint. This object is
   * that contract on Hadoop paths:
   *
-  *   - the lock is `<storePath>.lock`, a SIBLING of the log directory
-  *     (never inside it: `vacuum()` deletes and renames the directory
-  *     wholesale, which must not destroy a held lock);
+  *   - the lock is `<storePath>.lock`, a SIBLING of the log directory,
+  *     so no layout change inside the store dir can touch a held lock;
   *   - acquisition is an atomic exclusive create that CARRIES the owner
   *     record — on `file:` paths the record is written to a temp file and
   *     published via a hard link (link(2) fails atomically if the target
@@ -57,9 +56,13 @@ import org.apache.spark.sql.SparkSession
   * readers mmap one mutable container file and must fence a writer's
   * in-place byte rewrites. Parquet storage removes that need — data
   * files are immutable once written and every commit is new files plus
-  * an atomic marker/rename, so readers here are LOCK-FREE by
+  * a marker or a pointer swap, so readers here are LOCK-FREE by
   * construction (MVCC via the latest-active view, committed-delta
-  * markers, generation pointers) and only writers ever contend.
+  * markers) and only writers ever contend. A rewrite — vacuum, the
+  * cards rebuild, an IVF rebuild — writes a new generation and swaps
+  * the `CURRENT` pointer ([[Generations]]); the generation it
+  * supersedes is kept until the next swap, so a reader that resolved
+  * it just before the swap still finds every file it planned on.
   */
 object StoreLock {
 

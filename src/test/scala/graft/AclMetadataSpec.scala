@@ -6,11 +6,11 @@ import org.apache.spark.sql.functions._
 /** Metadata-contract ACL (reference src/memvid/acl.rs — its own unit
   * tests mirrored here, plus the normalization and re-rank corners the
   * oracle gate's fixture doesn't isolate). */
-class AclMetadataSpec extends SparkSpec {
+class AclMetadataSpec extends SparkSpec with TempStores {
   import spark.implicits._
 
   private def tmpDir: String =
-    java.nio.file.Files.createTempDirectory("graft-acl-meta").toString
+    tempDir("graft-acl-meta")
 
   private val restricted = Map(
     Acl.TenantKey -> "tenant-a",

@@ -5,7 +5,7 @@ import graft.ops.{Funnel, Sketches}
 import graft.pipeline.Curation
 import org.apache.spark.sql.functions._
 
-class AnalyticsSpec extends SparkSpec {
+class AnalyticsSpec extends SparkSpec with TempStores {
   import spark.implicits._
 
   // ---- PageRank ----
@@ -262,7 +262,7 @@ class AnalyticsSpec extends SparkSpec {
   // ---- facade integration: entityRank + duplicateClusters ----
 
   test("graft facade: entityRank orbits the hub entity") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-rank").toString
+    val dir = tempDir("graft-rank")
     val g = new api.Graft(spark, dir)
     // star: alice links to four values; bob links to one
     g.remember("alice", "pet", "rex")
@@ -276,7 +276,7 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("graft facade: duplicateClusters elects one keeper per cluster") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dup").toString
+    val dir = tempDir("graft-dup")
     val g = new api.Graft(spark, dir)
     val body = "the quick brown fox jumps over the lazy dog again and again " * 8
     g.put("mem://a", body + "tail one")
@@ -374,7 +374,7 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("graft facade: tokenizer train -> encode and importance selection") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tok").toString
+    val dir = tempDir("graft-tok")
     val g = new api.Graft(spark, dir)
     g.put("mv2://a", "alpha beta alpha beta gamma")
     g.put("mv2://b", "alpha beta alpha alpha beta")
@@ -393,7 +393,7 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("graft facade: changesSince classifies the delta") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-diff").toString
+    val dir = tempDir("graft-diff")
     val g = new api.Graft(spark, dir)
     val id1 = g.put("mv2://x", "original text here").get
     g.put("mv2://y", "stays the same")

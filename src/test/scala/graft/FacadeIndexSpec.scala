@@ -11,10 +11,10 @@ import org.apache.spark.sql.functions._
   * IVF index, staleness falls back to the corpus path, and results are
   * bit-equal either way.
   */
-class FacadeIndexSpec extends SparkSpec {
+class FacadeIndexSpec extends SparkSpec with TempStores {
 
   private def tmpStore(): String =
-    java.nio.file.Files.createTempDirectory("graft_facade_idx").toString
+    tempDir("graft_facade_idx")
 
   private def rows(df: DataFrame): Seq[(Long, Double)] =
     df.select(col("id"), round(col("score"), 9).as("s"))
@@ -553,7 +553,7 @@ class FacadeIndexSpec extends SparkSpec {
     import spark.implicits._
     val tbl = "facade_stream_tracked_spec"
     spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_tracked")
+    val tmp = java.nio.file.Paths.get(tempDir("graft_stream_tracked"))
     val src = tmp.resolve("src").toString
     new java.io.File(src).mkdirs()
     val ck = tmp.resolve("ck").toString
@@ -610,7 +610,7 @@ class FacadeIndexSpec extends SparkSpec {
     val tbl = "facade_stream_selfcompact_spec"
     spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
     spark.sql(s"DROP TABLE IF EXISTS `${tbl}_ref`")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_selfc")
+    val tmp = java.nio.file.Paths.get(tempDir("graft_stream_selfc"))
     val src = tmp.resolve("src").toString
     new java.io.File(src).mkdirs()
     val ck = tmp.resolve("ck").toString

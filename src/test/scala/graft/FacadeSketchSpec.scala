@@ -13,10 +13,10 @@ import org.apache.spark.sql.functions._
   * explicit allowedIds composition, and the staleness ladder (a stale
   * sketch is skipped, never applied lossily).
   */
-class FacadeSketchSpec extends SparkSpec {
+class FacadeSketchSpec extends SparkSpec with TempStores {
 
   private def tmpStore(): String =
-    java.nio.file.Files.createTempDirectory("graft_facade_sketch").toString
+    tempDir("graft_facade_sketch")
 
   private def rows(df: DataFrame): Seq[(Long, Double)] =
     df.select(col("id"), round(col("score"), 9).as("s"))

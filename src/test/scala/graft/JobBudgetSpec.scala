@@ -7,21 +7,35 @@ import graft.api.Graft
   * attached). A change that adds a job fails here instead of hiding in
   * benchmark noise; a change that removes jobs lowers the ceiling to its
   * new count. */
-class JobBudgetSpec extends SparkSpec {
+class JobBudgetSpec extends SparkSpec with TempStores {
 
   /** ceilings: the counts measured when each was last lowered */
   private val SearchJobs = 5
-  private val AskJobs = 4
+  private val AskJobs = 16
   /** a put plus the lex, sketch and vec catch-up from its held rows */
   private val PutRefreshJobs = 7
 
+  /** the jobs `run` starts, counted by the caller's job group and by a
+    * listener that sees every job: the two agree, so no job of the call
+    * escapes the group */
   private def jobs(run: => Unit): Int = {
     val sc = spark.sparkContext
     val group = s"job-budget-${java.util.UUID.randomUUID}"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet(): Unit
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
     sc.setJobGroup(group, group)
     try run finally sc.clearJobGroup()
     org.apache.spark.TestListenerBus.drain(sc)
-    sc.statusTracker.getJobIdsForGroup(group).length
+    sc.removeSparkListener(listener)
+    val byGroup = sc.statusTracker.getJobIdsForGroup(group).length
+    assert(byGroup == started.get,
+      s"$byGroup jobs in the caller's group, ${started.get} started")
+    byGroup
   }
 
   private val lex = "job_budget_spec_lex"
@@ -29,23 +43,19 @@ class JobBudgetSpec extends SparkSpec {
 
   /** a 60-doc, four-track store with all three artifacts built */
   private def withStore(body: (Graft, String) => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_job_budget").toString
-    def drop(): Unit = Seq(lex, skt).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
-    drop()
-    try {
-      val g = new Graft(spark, dir)
-      val topics = Seq("river delta sediment", "orchard pruning season",
-        "kernel scheduler latency", "harbor tide charts")
-      topics.zipWithIndex.foreach { case (t, k) =>
-        g.frames.put((0 until 15).map(i =>
-          (s"mv2://budget/$k/$i", s"note $i on $t with detail word$i and track$k")),
-          track = Some(s"track$k"))
-      }
-      g.buildLexIndex(lex, stemmed = true, partitionByTrack = true)
-      g.buildSketchTable(skt)
-      g.buildVecIndex(s"$dir/vec", k = 2, iters = 1, nprobe = 2)
-      body(g, dir)
-    } finally drop()
+    val dir = tempDir("graft_job_budget", lex, skt)
+    val g = new Graft(spark, dir)
+    val topics = Seq("river delta sediment", "orchard pruning season",
+      "kernel scheduler latency", "harbor tide charts")
+    topics.zipWithIndex.foreach { case (t, k) =>
+      g.frames.put((0 until 15).map(i =>
+        (s"mv2://budget/$k/$i", s"note $i on $t with detail word$i and track$k")),
+        track = Some(s"track$k"))
+    }
+    g.buildLexIndex(lex, stemmed = true, partitionByTrack = true)
+    g.buildSketchTable(skt)
+    g.buildVecIndex(s"$dir/vec", k = 2, iters = 1, nprobe = 2)
+    body(g, dir)
   }
 
   /** a note whose fact sentence mints a memory card, as an agent's is */

@@ -5,7 +5,7 @@ import graft.text.LangId
 import graft.vector.ProductQuantizer
 import org.apache.spark.sql.functions._
 
-class MiscOpsSpec extends SparkSpec {
+class MiscOpsSpec extends SparkSpec with TempStores {
   import spark.implicits._
 
   test("langid: stopword profiles and cjk detection") {
@@ -18,7 +18,7 @@ class MiscOpsSpec extends SparkSpec {
   }
 
   test("replay: record, replay with match_rate, compare sessions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-replay").toString
+    val dir = tempDir("graft-replay")
     val base = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
     base.createOrReplaceTempView("replay_base")
     def exec(input: String) = spark.sql(input)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
   * a regression here means a plan quietly degraded even if results stay
   * correct. Complements SCALE.md's claims with executable checks.
   */
-class PlanPropertiesSpec extends SparkSpec {
+class PlanPropertiesSpec extends SparkSpec with TempStores {
   import spark.implicits._
 
   private def plan(name: String): String = {
@@ -78,7 +78,7 @@ class PlanPropertiesSpec extends SparkSpec {
 
   test("store put dedup is a left-anti join, not a driver hash set") {
     val store = new graft.store.FrameStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-put-anti").toString + "/frames")
+      tempDir("graft-put-anti") + "/frames")
     store.put(Seq(("u://a", "seed text for the anti-join dedup plan")))
     val p = store.freshHashes(Seq("deadbeef")).queryExecution.executedPlan.toString
     assert(p.contains("LeftAnti"), s"put dedup must plan an anti-join:\n$p")
@@ -158,7 +158,7 @@ class PlanPropertiesSpec extends SparkSpec {
       // (pinned) node/rank inputs, over the bucketed scan vs a plain
       // parquet copy — the plain side pays exactly one extra exchange,
       // the edge-sized one the bucketed layout eliminates every round
-      val tmp = java.nio.file.Files.createTempDirectory("edge-plain").toString
+      val tmp = tempDir("edge-plain")
       spark.table("edge_plan_spec").write.mode("overwrite").parquet(tmp)
       val edPlain = spark.read.parquet(tmp)
       val nodes = spark.table("edge_plan_spec").select(col("src").as("node"))
@@ -179,7 +179,7 @@ class PlanPropertiesSpec extends SparkSpec {
   }
 
   test("persisted IVF search prunes unprobed clusters at the partition level") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-plan").toString
+    val dir = tempDir("graft-ivf-plan")
     val emb = Tables.embeddings(spark, sfDir).select(
       org.apache.spark.sql.functions.col("vec_id"),
       org.apache.spark.sql.functions.col("embedding"))
@@ -384,7 +384,7 @@ class PlanPropertiesSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sfDir)
     val cents = Seq(0L, 1L, 2L, 3L).map(i =>
       (i.toInt, graft.vector.VectorSearch.queryVector(emb, "vec_id", "embedding", i)))
-    val dir = java.nio.file.Files.createTempDirectory("ivf_part").toString
+    val dir = tempDir("ivf_part")
     graft.vector.VectorSearch.assignClusters(emb, "embedding", cents)
       .write.mode("overwrite").partitionBy("cluster").parquet(dir)
     val probe = spark.read.parquet(dir).filter(col("cluster").isin(0, 2))
@@ -413,7 +413,7 @@ class PlanPropertiesSpec extends SparkSpec {
     // reaches the frames through a LEFT-SEMI join (no payload moves for
     // the test), the result is a bounded TakeOrdered, and nothing
     // degenerates to a cartesian product
-    val dir = java.nio.file.Files.createTempDirectory("graphroute_plan").toString
+    val dir = tempDir("graphroute_plan")
     Tables.orders(spark, sfDir).select(
         concat(lit("cust:"), col("o_custkey")).as("entity"),
         lit("order_priority").as("slot"),
@@ -440,7 +440,7 @@ class PlanPropertiesSpec extends SparkSpec {
     // the r15 delta-dir contract: read() unions base + committed deltas,
     // and the nprobe `cluster IN` filter pushes through the Union so
     // EVERY leg prunes at the partition level
-    val dir = java.nio.file.Files.createTempDirectory("ivf_union_prune").toString
+    val dir = tempDir("ivf_union_prune")
     val vecs = (0 until 40).map { i =>
       (i.toLong, Array((i % 4) * 3f, (i % 4) * 3f))
     }.toDF("vec_id", "embedding")
@@ -475,7 +475,7 @@ class PlanPropertiesSpec extends SparkSpec {
     // (read-mostly phase) + BM25 scoring satisfied by the bucketed
     // postings read + the rank page joined back via broadcast — no
     // data-sized shuffle anywhere in the serve path
-    val dir = java.nio.file.Files.createTempDirectory("facade_plan").toString
+    val dir = tempDir("facade_plan")
     val g = new graft.api.Graft(spark, dir)
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text")).limit(200)
@@ -503,7 +503,7 @@ class PlanPropertiesSpec extends SparkSpec {
 
   test("facade-built IVF index prunes unprobed clusters at the partition level") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("facade_vec_plan").toString
+    val dir = tempDir("facade_vec_plan")
     val g = new graft.api.Graft(spark, dir)
     Seq("alpha beta gamma", "delta epsilon zeta", "eta theta iota",
         "kappa lambda mu").zipWithIndex

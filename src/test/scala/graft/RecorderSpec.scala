@@ -3,7 +3,7 @@ package graft
 import graft.replay.Replay
 
 /** ST6 recording lifecycle (reference replay_ops.rs:24-210). */
-class RecorderSpec extends SparkSpec {
+class RecorderSpec extends SparkSpec with TempStores {
 
   test("one active session at a time; end requires an active session") {
     val rec = new Replay.Recorder()
@@ -48,7 +48,7 @@ class RecorderSpec extends SparkSpec {
   }
 
   test("facade auto-records put/find/ask while a session is active (replay_ops wiring)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-rec-api").toString
+    val dir = tempDir("graft-rec-api")
     val g = new graft.api.Graft(spark, dir)
     g.put("mv2://pre/0", "before recording - never recorded")
     assert(!g.isRecording)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * 5 docs with fixed timestamps; FIXTURES.md §1): exact hit sets, rank
   * order, uri/scope filters, top_k, snippet content.
   */
-class ReferenceCorpusSpec extends SparkSpec {
+class ReferenceCorpusSpec extends SparkSpec with TempStores {
   import spark.implicits._
 
   private def ts(s: Long) = new Timestamp(s * 1000)
@@ -93,7 +93,7 @@ class ReferenceCorpusSpec extends SparkSpec {
 
   test("timeline: ordered, since/until bounds, limit (search.rs:324-494)") {
     import graft.api.Graft
-    val dir = java.nio.file.Files.createTempDirectory("graft-timeline").toString
+    val dir = tempDir("graft-timeline")
     val g = new Graft(spark, dir)
     // reference fixture puts docs with increasing timestamps
     Seq(("mv2://a", "first doc",  1700000000L), ("mv2://b", "second doc", 1700000100L),

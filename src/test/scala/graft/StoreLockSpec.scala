@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.store.{FrameStore, StoreLock}
 
 /** Writer-discipline contract (reference src/lock.rs + src/lockfile.rs):
@@ -8,9 +7,9 @@ import graft.store.{FrameStore, StoreLock}
   * through the exclusive lockfile and mint ids from the persisted
   * watermark — no duplicate ids, structured locked errors, stale-lock
   * takeover, and id monotonicity across vacuum. */
-class StoreLockSpec extends SparkSpec {
+class StoreLockSpec extends SparkSpec with TempStores {
 
-  private def tmpDir: String = Files.createTempDirectory("graft-lock").toString
+  private def tmpDir: String = tempDir("graft-lock")
 
   test("two concurrent handles: commits serialize, ids never collide") {
     val dir = s"$tmpDir/frames"

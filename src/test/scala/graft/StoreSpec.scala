@@ -6,10 +6,10 @@ import graft.api.Graft
 import graft.ingest.{Enrich, Structure}
 import graft.store.FrameStore
 
-class StoreSpec extends SparkSpec {
+class StoreSpec extends SparkSpec with TempStores {
 
   private def tmpDir: String =
-    Files.createTempDirectory("graft-test").toString
+    tempDir("graft-test")
 
   private def ts(ms: Long) = new Timestamp(ms)
 
@@ -286,7 +286,7 @@ class StoreSpec extends SparkSpec {
 
   test("same-uri re-put appends (no panic) and empty content is storable (mutation.rs:210,352)") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-uri").toString
+    val dir = tempDir("graft-uri")
     val g = new Graft(spark, dir)
     assert(g.put("mv2://unique", "First").isDefined)
     // reference contract: replace OR append, but never a crash
@@ -301,7 +301,7 @@ class StoreSpec extends SparkSpec {
 
   test("graft facade: near-duplicates, contamination, quality report") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-pipeline").toString
+    val dir = tempDir("graft-pipeline")
     val g = new Graft(spark, dir)
     g.put("mv2://a", "the quick brown fox jumps over the lazy dog near the river bank")
     g.put("mv2://b", "the quick brown fox jumps over the lazy dog near the river delta")
@@ -336,7 +336,7 @@ class StoreSpec extends SparkSpec {
 
   test("doctor reports orphans and dangling cards; repairCards rebuilds from live frames") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-doctor").toString
+    val dir = tempDir("graft-doctor")
     val g = new Graft(spark, dir)
     val bigDoc = (1 to 80).map(i => s"Paragraph $i about spark engines.").mkString(" ")
     val id1 = g.put("mv2://doc/1", bigDoc + " I live in Berlin.").get     // chunks + a card
@@ -364,7 +364,7 @@ class StoreSpec extends SparkSpec {
 
   test("doctorRun rebuild_lex_index reproduces the index's OWN analyzer (stemmed stays stemmed)") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-doctor-stem").toString
+    val dir = tempDir("graft-doctor-stem")
     val g = new Graft(spark, dir)
     g.put("mv2://s/1", "running jumps quickly")
     g.put("mv2://s/2", "walked runner jumping")
@@ -390,7 +390,7 @@ class StoreSpec extends SparkSpec {
 
   test("repair after a destroyed card index restores memory answers " +
       "(mirrors doctor_rebuild_produces_searchable_index)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-rebuild").toString
+    val dir = tempDir("graft-rebuild")
     val g = new Graft(spark, dir)
     g.put("mv2://doc/1", "My name is Alice. I work at Initech.")
     assert(g.getCurrent("user", "name").contains("Alice"))
@@ -411,7 +411,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("stats report: empty store yields zeros, lifecycle counts add up") {
-    val dir = Files.createTempDirectory("graft-stats").toString
+    val dir = tempDir("graft-stats")
     val store = new FrameStore(spark, dir)
     val empty = graft.store.StoreStats.report(store).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -436,7 +436,7 @@ class StoreSpec extends SparkSpec {
 
   test("updateMany/deleteMany: one commit each, same rows as per-call") {
     import org.apache.spark.sql.functions.{col, countDistinct}
-    val dir = Files.createTempDirectory("graft-batchmut").toString
+    val dir = tempDir("graft-batchmut")
     val store = new FrameStore(spark, dir)
     val ids = store.put(Seq(("b/1", "one"), ("b/2", "two"), ("b/3", "three")))
     val newIds = store.updateMany(Seq(
@@ -454,7 +454,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("stats after vacuum: reclaimable space drops to zero") {
-    val dir = Files.createTempDirectory("graft-statsvac").toString
+    val dir = tempDir("graft-statsvac")
     val store = new FrameStore(spark, dir)
     val ids = store.put(Seq(("v/1", "aaaa"), ("v/2", "bbbb"), ("v/3", "cc")))
     store.update(ids.head, "aaaa v2", "v/1")

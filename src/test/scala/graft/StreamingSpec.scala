@@ -6,11 +6,11 @@ import graft.streaming.StreamingIngest
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-class StreamingSpec extends SparkSpec {
+class StreamingSpec extends SparkSpec with TempStores {
   import spark.implicits._
 
   test("streaming ingest: files become searchable frames; enrichment is incremental") {
-    val base = Files.createTempDirectory("graft-stream").toString
+    val base = tempDir("graft-stream")
     val in = s"$base/in"; val frames = s"$base/frames"
     val ck = s"$base/ck"; val sketches = s"$base/sk"; val log = s"$base/log"
     new java.io.File(in).mkdirs()

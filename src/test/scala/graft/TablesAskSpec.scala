@@ -5,7 +5,7 @@ import graft.search.{FrameCols, Search}
 import graft.tables.ExtractedTables
 import org.apache.spark.sql.functions._
 
-class TablesAskSpec extends SparkSpec {
+class TablesAskSpec extends SparkSpec with TempStores {
   import spark.implicits._
 
   private val md =
@@ -40,7 +40,7 @@ class TablesAskSpec extends SparkSpec {
   }
 
   test("table export: csv and json round-trip") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tables").toString
+    val dir = tempDir("graft-tables")
     val docs = Seq((7L, md)).toDF("id", "text")
     val tables = ExtractedTables.extract(docs, "id", "text")
     ExtractedTables.exportCsv(tables, (7L << 20), s"$dir/csv")
@@ -56,7 +56,7 @@ class TablesAskSpec extends SparkSpec {
   }
 
   test("sharded export: parallel parts, same rows, order by row index") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-shards").toString
+    val dir = tempDir("graft-shards")
     // a 40-row table (larger than the markdown fixture) to spread shards
     val body = (1 to 40).map(i => s"| n$i | ${i * 10} |").mkString("\n")
     val bigMd = s"| name | age |\n| --- | --- |\n$body"

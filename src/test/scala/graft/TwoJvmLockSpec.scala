@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *      catches the index up to the foreign delta and serving returns
   *      to the indexed route with the foreign doc ranked.
   */
-class TwoJvmLockSpec extends SparkSpec {
+class TwoJvmLockSpec extends SparkSpec with TempStores {
 
   /** fork a real second JVM running `mainClass`; (exitCode, stdout).
     * Classpath and JDK-17 add-opens are inherited from this forked test
@@ -47,7 +47,7 @@ class TwoJvmLockSpec extends SparkSpec {
     fork("graft.tools.TwoJvmWriter", args: _*)
 
   test("two JVMs: lock blocks a foreign process; watermark + refresh close the loop") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_twojvm").toString
+    val dir = tempDir("graft_twojvm")
     val store = s"$dir/frames"
     val tbl = "twojvm_lex_spec"
     spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
@@ -105,7 +105,7 @@ class TwoJvmLockSpec extends SparkSpec {
   }
 
   test("two JVMs racing the SAME vec refresh: the maintenance lock serializes them") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_twojvm_vec").toString
+    val dir = tempDir("graft_twojvm_vec")
     val vecPath = s"$dir/vec"
     val g = new Graft(spark, dir)
     Seq("spark joins shuffle data", "window functions rank rows",

@@ -11,11 +11,11 @@ import org.apache.spark.sql.functions._
   * keeps the Spark plan, and every event that can change the live sketch
   * drops the cached one.
   */
-class LiveSketchSpec extends SparkSpec {
+class LiveSketchSpec extends SparkSpec with graft.TempStores {
   import spark.implicits._
 
   private def tmpStore(): String =
-    java.nio.file.Files.createTempDirectory("graft_live_sketch").toString
+    tempDir("graft_live_sketch")
 
   private def page(df: DataFrame): Seq[(Long, Double)] =
     df.select(col("id"), col("score")).collect()

@@ -11,32 +11,26 @@ import org.apache.spark.sql.functions._
   * each artifact must hold the rows a full rebuild over the same store
   * holds — postings, sketch rows, and IVF assignments under the index's
   * own centroids. */
-class OwnCommitRefreshSpec extends SparkSpec {
+class OwnCommitRefreshSpec extends SparkSpec with graft.TempStores {
 
   private val lex = "own_commit_spec_lex"
   private val skt = "own_commit_spec_sk"
   private val refLex = "own_commit_spec_ref_lex"
   private val refSkt = "own_commit_spec_ref_sk"
 
-  private def dropAll(): Unit =
-    Seq(lex, skt, refLex, refSkt).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
-
   /** a two-track store with a stemmed, track-partitioned postings table,
     * the sketch table and the IVF index attached */
   private def withStore(body: (Graft, String) => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_own_commit").toString
-    dropAll()
-    try {
-      val g = new Graft(spark, dir)
-      Seq("river delta sediment", "kernel scheduler latency").zipWithIndex.foreach {
-        case (t, k) => g.frames.put((0 until 10).map(i =>
-          (s"mv2://own/$k/$i", s"note $i on $t with word$i")), track = Some(s"track$k"))
-      }
-      g.buildLexIndex(lex, stemmed = true, partitionByTrack = true)
-      g.buildSketchTable(skt)
-      g.buildVecIndex(s"$dir/vec", k = 2, iters = 1, nprobe = 2)
-      body(g, dir)
-    } finally dropAll()
+    val dir = tempDir("graft_own_commit", lex, skt, refLex, refSkt)
+    val g = new Graft(spark, dir)
+    Seq("river delta sediment", "kernel scheduler latency").zipWithIndex.foreach {
+      case (t, k) => g.frames.put((0 until 10).map(i =>
+        (s"mv2://own/$k/$i", s"note $i on $t with word$i")), track = Some(s"track$k"))
+    }
+    g.buildLexIndex(lex, stemmed = true, partitionByTrack = true)
+    g.buildSketchTable(skt)
+    g.buildVecIndex(s"$dir/vec", k = 2, iters = 1, nprobe = 2)
+    body(g, dir)
   }
 
   /** over 1200 characters: the put writes a document and its chunks */

@@ -1,6 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import graft.functions.{F, InLiveVersionExpr}
 import graft.model.Frame
@@ -11,11 +10,11 @@ import org.apache.spark.sql.functions._
   * as a filtered log scan) against the window plan it stands in for, and
   * the cache that holds the keys: its fill, roll-forward, invalidation,
   * over-cap route and completeness rule. */
-class LiveViewSpec extends graft.SparkSpec {
+class LiveViewSpec extends graft.SparkSpec with graft.TempStores {
   import spark.implicits._
 
   private def tmpStore(): String =
-    Files.createTempDirectory("graft-live-view").toString + "/frames"
+    tempDir("graft-live-view") + "/frames"
 
   /** the window plan over every commit */
   private def windowPlan(s: FrameStore): DataFrame = s.asOf(Long.MaxValue)
