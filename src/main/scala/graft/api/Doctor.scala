@@ -190,16 +190,20 @@ object Doctor {
     planWithProbe(g, opts, lexTable, vecPath, vecIdCol, vecCol)._1
 
   /** What a probe reads that another handle or process can change: the
-    * commit watermark, every attached serving artifact's stamp, and the
+    * commit watermark and the last vacuum's, the cards table's live dir
+    * and its files, every attached serving artifact's stamp, and the
     * committed state of each IVF dir in play (live generation, its
-    * marker nonce, its committed deltas). A foreign refresh or compaction
-    * changes an artifact without moving the watermark. */
+    * marker nonce, its committed deltas). A foreign vacuum, cards
+    * rebuild, refresh or compaction changes what the probe counts
+    * without moving the watermark. */
   private def probeKey(g: Graft, vecPath: Option[String]): Seq[Any] = {
     val attached = g.attachedArtifacts
     val vecPaths = (vecPath.toSeq ++ attached.collect {
       case v: ServingArtifact.IvfDir => v.path
     }).distinct.filter(graft.vector.IvfIndex.exists(g.spark, _))
-    (g.frames.persistedWatermark +: attached.map(_.stamp())) ++
+    val cards = g.cardsDir
+    (Seq(g.frames.persistedWatermark, g.frames.lastVacuumSeq, cards,
+      graft.store.Fs.stamp(g.spark, cards)) ++ attached.map(_.stamp())) ++
       vecPaths.map(graft.vector.IvfIndex.version(g.spark, _))
   }
 

@@ -690,8 +690,10 @@ final class Graft(val spark: SparkSession, basePath: String,
 
   // ---- structured memory ----
   /** the cards table's live dir: the generation [[repairCards]] last
-    * swapped in, else `cardsPath` itself ([[graft.store.Generations]]) */
-  private def cardsDir: String = Generations.live(spark, cardsPath)
+    * swapped in, else `cardsPath` itself ([[graft.store.Generations]]);
+    * no listing */
+  private[graft] def cardsDir: String =
+    Generations.pointed(spark, cardsPath).getOrElse(cardsPath)
 
   def cards: DataFrame = {
     val dir = cardsDir

@@ -72,14 +72,11 @@ final class FrameStore(spark: SparkSession, path: String,
       .as[Frame]
     else spark.emptyDataset[Frame]
 
-  /** The dir the log's files live in: the generation `CURRENT` names,
-    * else the store dir. Without a pointer, only a store whose
-    * `_graft_seq` records a vacuum lists its dir for a generation a torn
-    * swap left unnamed, so a log never vacuumed is resolved with one
-    * failed open and one small read, no listing. */
+  /** The dir the log's files live in: the generation the pointer names,
+    * else the store dir. A log never vacuumed resolves with failed
+    * opens, no listing. */
   private[store] def liveDir: String =
-    Generations.pointed(spark, path).getOrElse(
-      if (readSeqFile().forall(_._3 == 0L)) path else Generations.recover(spark, path))
+    Generations.pointed(spark, path).getOrElse(path)
 
   // ---- minted-watermark persistence (multi-writer id safety) ----
   private def seqFile = new org.apache.hadoop.fs.Path(

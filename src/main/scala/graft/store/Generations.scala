@@ -13,41 +13,48 @@ import org.apache.spark.sql.SparkSession
   * A root holds generations `gen-N`, each a self-contained directory
   * whose `_GRAFT_COMMITTED` marker is written last, and a `CURRENT` file
   * naming the live one. A root that never swapped is the legacy flat
-  * layout: its own contents are generation 0. A writer (holding the
-  * root's lock) [[write]]s generation N+1, then [[swap]]s the pointer.
-  * Readers resolve [[live]] and take no lock: the generation a swap
-  * supersedes is kept until the next swap, so a reader that resolved it
-  * just before finishes its scan. Older generations are deleted; for the
-  * flat generation 0 that means the root's own data entries.
+  * layout: its own contents are generation 0. A `gen-N` dir inside it
+  * stays out of a generation-0 read: Spark reads an unpartitioned dir's
+  * own files, not those of its subdirs. A writer (holding the root's
+  * lock) [[write]]s generation N+1, then [[swap]]s the pointer. Readers
+  * resolve [[pointed]] or [[live]] and take no lock: the generation a
+  * swap supersedes is kept until the next swap, so a reader that
+  * resolved it just before finishes its scan. Older generations are
+  * deleted; for the flat generation 0 that means the root's own data
+  * entries.
   */
 object Generations {
   private val Marker = "_GRAFT_COMMITTED"
   private val Current = "CURRENT"
   private val Prefix = "gen-"
 
-  /** the live dir: the one `CURRENT` names, else [[recover]]'s */
+  /** the live dir: [[pointed]]'s, else the highest committed generation,
+    * else the flat root (one listing) — for a root whose generations are
+    * all dirs, such as an IVF index, that may have lost its pointer */
   def live(spark: SparkSession, root: String): String =
-    pointed(spark, root).getOrElse(recover(spark, root))
+    pointed(spark, root).getOrElse {
+      val fs = Fs.of(spark, root)
+      gens(fs, root).map(_._2).distinct.filter(n => committed(fs, dirOf(root, n)))
+        .maxOption.fold(root)(dirOf(root, _))
+    }
 
-  /** the dir `CURRENT` names; None when the root has no pointer (it
-    * never swapped, or a swap is between its delete and rename). One
-    * open, no listing. */
-  def pointed(spark: SparkSession, root: String): Option[String] =
-    try Some(text(Fs.of(spark, root), new Path(s"$root/$Current")))
-      .filter(_.nonEmpty).map(name => s"$root/$name")
-    catch { case _: FileNotFoundException => None }
+  /** The dir the pointer names: `CURRENT`'s, else the committed one that
+    * the `CURRENT.tmp` of a swap torn between its delete and its rename
+    * names. None when there is neither: no swap finished or tore, so the
+    * flat generation 0 is live. A few opens, no listing. */
+  def pointed(spark: SparkSession, root: String): Option[String] = {
+    val fs = Fs.of(spark, root)
+    def named(file: String) =
+      try Some(text(fs, new Path(s"$root/$file"))).filter(_.nonEmpty).map(n => s"$root/$n")
+      catch { case _: FileNotFoundException => None }
+    // CURRENT once more: the rename may land between the first two opens
+    named(Current).orElse(named(s"$Current.tmp").filter(committed(fs, _)))
+      .orElse(named(Current))
+  }
 
   private def text(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
-  }
-
-  /** the highest committed generation, else the root as the flat
-    * generation 0: where a pointerless root lives (one listing) */
-  def recover(spark: SparkSession, root: String): String = {
-    val fs = Fs.of(spark, root)
-    gens(fs, root).map(_._2).distinct.filter(n => committed(fs, dirOf(root, n)))
-      .maxOption.fold(root)(dirOf(root, _))
   }
 
   /** the generation number of a resolved dir (0 for the flat root) */
@@ -88,8 +95,8 @@ object Generations {
   }
 
   /** Point `CURRENT` at generation `gen` — write a tmp, delete, rename;
-    * [[recover]] covers the window between the last two — then delete
-    * every generation older than the one this swap supersedes. */
+    * [[pointed]] reads the tmp between the last two — then delete every
+    * generation older than the one this swap supersedes. */
   def swap(spark: SparkSession, root: String, gen: Long): Unit = {
     val fs = Fs.of(spark, root)
     val tmp = new Path(s"$root/$Current.tmp")

@@ -28,4 +28,22 @@ class DoctorDryRunSpec extends graft.SparkSpec with graft.TempStores {
     assert(again.rows.filter(_.rowType == "post_verify")
       .exists(r => r.name == "lex_index_stale" && r.detailN == 0L))
   }
+
+  test("a dry run re-probes when another handle rebuilds the cards between plan and verify") {
+    val dir = tempDir("graft_doctor_dry_cards")
+    val g = new Graft(spark, dir)
+    val alice = g.put("mv2://dry/alice", "My name is Alice. I work at Initech.").get
+    g.put("mv2://dry/bob", "Bob lives in Paris.")
+    g.delete(alice)
+    g.frames.vacuum() // Alice's frames are purged: her cards now dangle
+    val opts = Doctor.DoctorOptions(dryRun = true)
+    val plan = Doctor.planWithProbe(g, opts, None, None, "vec_id", "embedding")
+    assert(plan._2("dangling_cards") > 0L)
+    new Graft(spark, dir).repairCards() // the watermark does not move
+    val report = Doctor.runPlanned(g, opts, plan, None, None,
+      lexStemmed = true, "vec_id", "embedding")
+    val post = report.rows.filter(_.rowType == "post_verify")
+      .map(r => r.name -> r.detailN).toMap
+    assert(post("dangling_cards") == 0L, "the verify reused the plan's stale count")
+  }
 }

@@ -102,13 +102,36 @@ class GenerationsSpec extends graft.SparkSpec with graft.TempStores {
     assertReopensAs(root, w, before)
   }
 
+  test("vacuum: a generation's files written before its marker and the pointer read as the old state") {
+    val root = tempDir("graft-gen-unmarked")
+    val g = storeWithHistory(root)
+    val w = g.currentVersion
+    val before = view(g, w)
+    val logRows = rows(g.frames.log.toDF)
+    // gen-1 as the vacuum's write job leaves it before the marker: a
+    // reader of the flat generation 0 must not read it, whether it
+    // resolved before the seq write or after it
+    g.frames.latestActive.write.parquet(s"$root/frames/gen-1")
+    assert(rows(new Graft(spark, root).frames.log.toDF) == logRows)
+    val r = seq(root)
+    writeSeq(s"$root/frames/_graft_seq", Seq(r(0), r(1), r(1)))
+    val h = new Graft(spark, root)
+    assert(rows(h.frames.log.toDF) == logRows)
+    assert(view(h, w) == before)
+    assertReopensAs(root, w, before)
+    val v = new Graft(spark, root)
+    v.frames.vacuum()
+    assert(v.frames.log.count() == before.live + 1, "the next vacuum replaces the leftover")
+  }
+
   test("vacuum: a swap torn between the pointer's delete and rename recovers the new generation") {
     val root = tempDir("graft-gen-torn")
     val g = storeWithHistory(root)
     val w = g.currentVersion
     val before = view(g, w)
     g.frames.vacuum()
-    Files.delete(Paths.get(s"$root/frames/CURRENT"))
+    // the swap's pointer deleted, its tmp not yet renamed into place
+    Files.move(Paths.get(s"$root/frames/CURRENT"), Paths.get(s"$root/frames/CURRENT.tmp"))
     val reopened = new Graft(spark, root)
     assert(reopened.frames.log.count() == before.live, "the compacted generation is live")
     assertReopensAs(root, w, before)
@@ -185,6 +208,21 @@ class GenerationsSpec extends graft.SparkSpec with graft.TempStores {
     }
   }
 
+  test("cards: a rebuild's files written before its marker and the pointer read as the old table") {
+    val root = tempDir("graft-gen-cards-unmarked")
+    val g = new Graft(spark, root)
+    g.put("mv2://gen/p1", "My name is Alice. I work at Initech.")
+    g.put("mv2://gen/p2", "Bob lives in Paris.")
+    val before = cardRows(g.cards)
+    assert(before.nonEmpty)
+    g.cards.write.parquet(s"$root/cards/gen-1") // the rebuild's job output, unmarked
+    val h = new Graft(spark, root)
+    assert(cardRows(h.cards) == before)
+    assert(h.getCurrent("user", "name").contains("Alice"))
+    val n = h.repairCards()
+    assert(h.cards.count() == n, "the rebuild replaces the leftover")
+  }
+
   test("resolving a log that was never vacuumed lists no directory and runs no Spark job") {
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.listcount.impl", classOf[GenerationsSpec.ListCountingFs].getName)
@@ -201,12 +239,37 @@ class GenerationsSpec extends graft.SparkSpec with graft.TempStores {
     assert(dir == s"listcount://$root/frames")
     assert(GenerationsSpec.lists.get == 0, "the store dir was listed")
     assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
+    // nor does one whose seq records a vacuum that left no pointer (the
+    // old flat vacuum, or a first vacuum stopped before its swap)
+    val r = new String(Files.readAllBytes(Paths.get(s"$root/frames/_graft_seq")), UTF_8)
+      .trim.split('\t').map(_.toLong)
+    writeSeq(s"$root/frames/_graft_seq", Seq(r(0), r(1), r(1)))
+    GenerationsSpec.lists.set(0)
+    assert(store.liveDir == s"listcount://$root/frames")
+    assert(GenerationsSpec.lists.get == 0, "the store dir was listed")
     // a vacuumed log still resolves through the pointer, no listing
     store.vacuum()
     GenerationsSpec.lists.set(0)
     assert(store.liveDir == s"listcount://$root/frames/gen-1")
     assert(GenerationsSpec.lists.get == 0)
     assert(store.liveCount == 2L)
+  }
+
+  test("resolving a cards table that was never rebuilt lists no directory") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.listcount.impl", classOf[GenerationsSpec.ListCountingFs].getName)
+    conf.setBoolean("fs.listcount.impl.disable.cache", true)
+    val root = tempDir("graft-gen-cards-resolve")
+    val g = new Graft(spark, root)
+    g.put("mv2://gen/p1", "My name is Alice. I work at Initech.")
+    val h = new Graft(spark, s"listcount://$root")
+    GenerationsSpec.lists.set(0)
+    assert(h.cardsDir == s"listcount://$root/cards")
+    assert(GenerationsSpec.lists.get == 0, "the cards dir was listed")
+    g.repairCards()
+    GenerationsSpec.lists.set(0)
+    assert(h.cardsDir == s"listcount://$root/cards/gen-1")
+    assert(GenerationsSpec.lists.get == 0)
   }
 }
 
